@@ -3234,25 +3234,8 @@ object Bench {
       only: Option[Set[String]],
       enforceBudget: Boolean = false,
       reserveSeconds: Double = 0.0): Seq[QTime] = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // survive a GC storm instead of dying mid-chunk (r15: the
-      // driver-run chunk-1 child spent 80+ s in GC and was killed by
-      // its own heartbeat monitor — "unable to send heartbeats to
-      // driver more than 60 times" at the default 10 s interval — and
-      // the re-run burned the wall budget that killed the artifact).
-      // A same-JVM local-mode heartbeat says nothing about cluster
-      // health; 60 s / 600 s keeps a degraded box's numbers flowing
-      // (the GC bill is still recorded per run in runs_gc_ms).
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.build("graft-bench",
+      master = Some(s"local[$cpus]"), shufflePartitions = Some(cpus.toInt))
 
     // warm-up: touch every table (footer reads — cheap) so schema
     // resolution and FS setup land outside timed windows. The generic
@@ -3912,6 +3895,16 @@ object Bench {
   // ---------------------------------------------------------------------
 
   def main(args: Array[String]): Unit = {
+    // survive a GC storm instead of dying mid-chunk (r15: a forked chunk
+    // child spent 80+ s in GC and was killed by its own heartbeat monitor
+    // at the default 10 s interval, and the re-run burned the wall budget).
+    // A same-JVM local-mode heartbeat says nothing about cluster health;
+    // 60 s / 600 s keeps a degraded box's numbers flowing (the GC bill is
+    // still recorded per run in runs_gc_ms). Set as system properties,
+    // which SparkConf reads, so they reach the bench's sessions (parent
+    // and forked children) and no other.
+    sys.props("spark.executor.heartbeatInterval") = "60s"
+    sys.props("spark.network.timeout") = "600s"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt

@@ -1,10 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import java.io.File
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  private def deleteRecursively(f: java.io.File): Unit = {
+  private def deleteRecursively(f: File): Unit = {
     if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(deleteRecursively))
     f.delete()
   }
@@ -14,27 +15,23 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    val spark = graft.core.Sessions.local("graft-verify")
+    new File(outDir).mkdirs()
     // A query that fails to run must be RECORDED, not just absent: the
     // round-8 loader break left 9 queries silently missing from the
     // correctness artifact (only the bench's n_err caught it). Failures go
     // to stderr for the log AND to errors.json for auditors/check.py.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    // the FULL contract roster, so check.py can assert every query has
+    // either a result dir or an errors row — a query silently SKIPPED
+    // (filter bug, not failure) must not produce a green-looking
+    // artifact. Written even for filtered dev runs (the filter is
+    // recorded so coverage is judged against what was asked to run).
+    val ranNames = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => only.forall(_.contains(n)))
+    ranNames.foreach { name =>
+      try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         val msg = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
         errors(name) = msg
@@ -43,38 +40,15 @@ object Verify {
         // in place — the compare would hash old results against the
         // current oracle and could print a contradictory OK row for a
         // query errors.json says failed (r9 advice)
-        deleteRecursively(new java.io.File(s"$outDir/$name"))
+        deleteRecursively(new File(s"$outDir/$name"))
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = errors
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
-    // the FULL contract roster, so check.py can assert every query has
-    // either a result dir or an errors row — a query silently SKIPPED
-    // (filter bug, not failure) must not produce a green-looking
-    // artifact. Written even for filtered dev runs (the filter is
-    // recorded so coverage is judged against what was asked to run).
-    val ranNames = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
-    Files.writeString(Paths.get(s"$outDir/contract.json"),
-      ranNames.map(q).mkString("[", ",", "]"))
-    val ran = SparkEntry.queries.count { case (n, _) => only.forall(_.contains(n)) }
-    System.err.println(s"[verify] done: n_ok=${ran - errors.size} n_err=${errors.size}")
+    val json = new ObjectMapper().registerModule(DefaultScalaModule)
+    json.writeValue(new File(s"$outDir/oracle_sql.json"), SparkEntry.oracleSql)
+    json.writeValue(new File(s"$outDir/errors.json"), errors)
+    json.writeValue(new File(s"$outDir/contract.json"), ranNames)
+    System.err.println(
+      s"[verify] done: n_ok=${ranNames.size - errors.size} n_err=${errors.size}")
     spark.stop()
   }
 }

@@ -20,7 +20,6 @@ import graft.sources.Tables
   * faster hash — covered by the ScalaTest specs.
   */
 object Pipeline {
-  private type Q = (SparkSession, String) => DataFrame
   private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
   private def embs(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
 
@@ -220,51 +219,85 @@ object Pipeline {
       .select(col("label").as("cid"),
         transform(col("centroid"), x => round(x, 6)).as("centroid"))
 
-  val queries: Map[String, Q] = Map(
+  val entries: Seq[Entry] = Seq(
     // exact content dedup: survivors + multiplicity per content hash
-    "dd_exact" -> ((s, dir) => {
+    Entry("dd_exact", (s, dir) => {
       Dedup.exactByContent(docs(s, dir), "doc_id", "text")
         .select(col("content_hash"), col("doc_id"), col("dup_count"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT md5(text) AS content_hash, min(doc_id) AS doc_id,
+           count(*) AS dup_count
+         FROM documents GROUP BY 1 ORDER BY doc_id"""),
 
     // exact n-gram jaccard near-dup pairs (inverted-index join; oracled)
-    "dd_ngram_pairs" -> ((s, dir) => {
+    Entry("dd_ngram_pairs", (s, dir) => {
       Dedup.ngramJaccardPairs(docs(s, dir), "doc_id", "text",
           threshold = 0.8, n = 3)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
         .orderBy("id_a", "id_b")
-    }),
+    }, oracle =
+      s"""WITH sh AS ($ShingleSql),
+         sizes AS (SELECT doc_id, count(*) AS set_size FROM sh GROUP BY 1),
+         inter AS (
+           SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
+           FROM sh a JOIN sh b
+             ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+           GROUP BY 1, 2)
+         SELECT id_a, id_b,
+           round(i::DOUBLE / (sa.set_size + sb.set_size - i), 4) AS jaccard
+         FROM inter
+         JOIN sizes sa ON sa.doc_id = id_a
+         JOIN sizes sb ON sb.doc_id = id_b
+         WHERE i::DOUBLE / (sa.set_size + sb.set_size - i) >= 0.8
+         ORDER BY id_a, id_b"""),
 
     // minhash LSH near-dup pairs (md5 hash mode -> fully oracled)
-    "dd_minhash_pairs" -> ((s, dir) => {
+    Entry("dd_minhash_pairs", (s, dir) => {
       Dedup.minhashPairs(docs(s, dir), "doc_id", "text", threshold = 0.7,
           mode = HashMode.Md5)
         .select(col("id_a"), col("id_b"),
           round(col("est_jaccard"), 4).as("est_jaccard"))
         .orderBy("id_a", "id_b")
-    }),
+    }, oracle =
+      minhashOracleSql(numHashes = 64, bands = 16, seed = 42L,
+        threshold = 0.7)),
 
     // simhash near-dup pairs (md5 hash mode -> fully oracled)
-    "dd_simhash_pairs" -> ((s, dir) => {
+    Entry("dd_simhash_pairs", (s, dir) => {
       Dedup.simhashPairs(docs(s, dir), "doc_id", "text", maxHamming = 3,
           mode = HashMode.Md5)
         .select(col("id_a"), col("id_b"),
           col("hamming").cast("int").as("hamming"))
         .orderBy("id_a", "id_b")
-    }),
+    }, oracle = simhashOracleSql(maxHamming = 3)),
 
     // near-dedup survivors: keep-first over the exact-jaccard pair set
-    "dd_survivors" -> ((s, dir) => {
+    Entry("dd_survivors", (s, dir) => {
       val d = docs(s, dir)
       val pairs = Dedup.ngramJaccardPairs(d, "doc_id", "text", 0.8, 3)
       Dedup.keepFirst(d, "doc_id", pairs).select("doc_id").orderBy("doc_id")
-    }),
+    }, oracle =
+      s"""WITH sh AS ($ShingleSql),
+         sizes AS (SELECT doc_id, count(*) AS set_size FROM sh GROUP BY 1),
+         inter AS (
+           SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
+           FROM sh a JOIN sh b
+             ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+           GROUP BY 1, 2),
+         dups AS (
+           SELECT DISTINCT id_b FROM inter
+           JOIN sizes sa ON sa.doc_id = id_a
+           JOIN sizes sb ON sb.doc_id = id_b
+           WHERE i::DOUBLE / (sa.set_size + sb.set_size - i) >= 0.8)
+         SELECT doc_id FROM documents
+         WHERE doc_id NOT IN (SELECT id_b FROM dups)
+         ORDER BY doc_id"""),
 
     // transitive duplicate clusters: iterative min-label propagation
     // (union-find semantics) over the same pair set; singletons cluster to
     // themselves (oracled via DuckDB recursive CTE)
-    "dd_clusters" -> ((s, dir) => {
+    Entry("dd_clusters", (s, dir) => {
       val d = docs(s, dir)
       val pairs = Dedup.ngramJaccardPairs(d, "doc_id", "text", 0.8, 3)
       val cc = Dedup.connectedComponents(pairs)
@@ -273,31 +306,48 @@ object Pipeline {
         .select(col("doc_id"),
           coalesce(col("cluster"), col("doc_id")).as("cluster"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      s"""WITH RECURSIVE $CcCtes
+         SELECT d.doc_id, coalesce(l.cluster, d.doc_id) AS cluster
+         FROM documents d LEFT JOIN labels l ON l.doc_id = d.doc_id
+         ORDER BY d.doc_id"""),
 
     // cluster-exact survivors: one doc per transitive component — compare
     // dd_survivors (greedy keep-first can keep several per component)
-    "dd_survivors_exact" -> ((s, dir) => {
+    Entry("dd_survivors_exact", (s, dir) => {
       val d = docs(s, dir)
       val pairs = Dedup.ngramJaccardPairs(d, "doc_id", "text", 0.8, 3)
       Dedup.keepFirstExact(d, "doc_id", pairs)
         .select("doc_id").orderBy("doc_id")
-    }),
+    }, oracle =
+      s"""WITH RECURSIVE $CcCtes
+         SELECT doc_id FROM documents
+         WHERE doc_id NOT IN
+           (SELECT doc_id FROM labels WHERE doc_id != cluster)
+         ORDER BY doc_id"""),
 
     // best-copy survivors: one doc per transitive component, keeping the
     // LONGEST copy (id tiebreak) — the keep-the-best-extraction policy,
     // vs dd_survivors_exact's keep-first (min id)
-    "dd_survivors_best" -> ((s, dir) => {
+    Entry("dd_survivors_best", (s, dir) => {
       val d = docs(s, dir)
       val pairs = Dedup.ngramJaccardPairs(d, "doc_id", "text", 0.8, 3)
       Dedup.keepBest(d, "doc_id", pairs, length(col("text")))
         .select("doc_id").orderBy("doc_id")
-    }),
+    }, oracle =
+      s"""WITH RECURSIVE $CcCtes
+         SELECT doc_id FROM (
+           SELECT d.doc_id,
+             row_number() OVER (
+               PARTITION BY coalesce(l.cluster, d.doc_id)
+               ORDER BY length(d.text) DESC, d.doc_id) AS rn
+           FROM documents d LEFT JOIN labels l ON l.doc_id = d.doc_id)
+         WHERE rn = 1 ORDER BY doc_id"""),
 
     // benchmark decontamination: corpus docs (id >= 50) whose word-3-gram
     // containment of a "benchmark" doc (id < 50) reaches 0.8 — the
     // train/test-leak detector (oracled)
-    "dd_contam" -> ((s, dir) => {
+    Entry("dd_contam", (s, dir) => {
       val d = docs(s, dir)
       Dedup.contaminationPairs(d.filter(col("doc_id") >= 50),
           d.filter(col("doc_id") < 50), "doc_id", "text",
@@ -305,7 +355,22 @@ object Pipeline {
         .select(col("corpus_id"), col("bench_id"),
           round(col("containment"), 4).as("containment"))
         .orderBy("corpus_id", "bench_id")
-    }),
+    }, oracle =
+      s"""WITH sh AS ($ShingleSql),
+         cs AS (SELECT doc_id AS corpus_id, shingle FROM sh
+                WHERE doc_id >= 50),
+         bs AS (SELECT doc_id AS bench_id, shingle FROM sh
+                WHERE doc_id < 50),
+         bsz AS (SELECT bench_id, count(*) AS bench_size FROM bs
+                 GROUP BY 1),
+         inter AS (SELECT cs.corpus_id, bs.bench_id, count(*) AS shared
+                   FROM cs JOIN bs ON cs.shingle = bs.shingle
+                   GROUP BY 1, 2)
+         SELECT corpus_id, bench_id,
+           round(shared::DOUBLE / bench_size, 4) AS containment
+         FROM inter JOIN bsz USING (bench_id)
+         WHERE shared::DOUBLE / bench_size >= 0.8
+         ORDER BY corpus_id, bench_id"""),
 
     // incremental dedup: the newest 1/5 of docs (by id) surviving exact +
     // minhash near-dup checks against the landed corpus (older 4/5) and
@@ -320,14 +385,16 @@ object Pipeline {
     // warmup). The inline-recompute contender that justifies the index
     // lives in the bench crossover rig (bench_ddinc_inline), not in the
     // contract — its 100 TB answer is always "use the index".
-    "dd_incremental" -> ((s, dir) => {
+    Entry("dd_incremental", (s, dir) => {
       val d = docs(s, dir)
       val cut = (d.agg(max(col("doc_id"))).head().getLong(0) + 1) * 4 / 5
       Dedup.incrementalSurvivors(d.filter(col("doc_id") >= cut),
           steadyMinhashIndex(s, dir, d.filter(col("doc_id") < cut)),
           "doc_id", "text", threshold = 0.8)
         .select("doc_id").orderBy("doc_id")
-    }),
+    }, oracle =
+      incrementalOracleSql(numHashes = 64, bands = 16, seed = 42L,
+        threshold = 0.8)),
 
     // the same incremental dedup through the MATERIALIZED corpus-index
     // path: hash/signature/bucket frames written to parquet once, read
@@ -335,7 +402,7 @@ object Pipeline {
     // semantics as dd_incremental (same oracle); what this row certifies
     // is the index round-trip, metadata-carried hyperparameters, and the
     // probe plan that never re-reads the corpus text.
-    "dd_incremental_idx" -> ((s, dir) => {
+    Entry("dd_incremental_idx", (s, dir) => {
       val d = docs(s, dir)
       val cut = (d.agg(max(col("doc_id"))).head().getLong(0) + 1) * 4 / 5
       // per-process, full-path-keyed temp location: overwrite-on-write,
@@ -348,64 +415,177 @@ object Pipeline {
           Dedup.readMinhashIndex(s, path, expectedSource = Some(dir)),
           "doc_id", "text", threshold = 0.8)
         .select("doc_id").orderBy("doc_id")
-    }),
+    }, oracle =
+      // the index path is semantics-preserving by design: same oracle
+      incrementalOracleSql(numHashes = 64, bands = 16, seed = 42L,
+        threshold = 0.8)),
 
     // span-level exact-substring duplication: maximal token ranges whose
     // every 8-gram appears in >= 2 docs — substring dedup's detection
     // pass, span-merged via gaps-and-islands (oracled)
-    "dd_spans" -> ((s, dir) => {
+    Entry("dd_spans", (s, dir) => {
       Dedup.repeatedSpans(docs(s, dir), "doc_id", "text", n = 8, minDocs = 2)
         .orderBy("doc_id", "span_start")
-    }),
+    }, oracle =
+      """WITH toks AS (
+           SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk
+           FROM documents),
+         grams AS (
+           SELECT doc_id, i.i AS pos,
+             md5(array_to_string(tk[(i.i + 1):(i.i + 8)], ' ')) AS g
+           FROM toks
+           CROSS JOIN unnest(range(0, greatest(0, len(tk) - 8 + 1))) AS i(i)),
+         rep AS (
+           SELECT g FROM grams GROUP BY g
+           HAVING count(DISTINCT doc_id) >= 2),
+         hits AS (SELECT doc_id, pos FROM grams JOIN rep USING (g)),
+         isl AS (
+           SELECT doc_id, pos,
+             pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos)
+               AS grp
+           FROM hits)
+         SELECT doc_id, min(pos)::BIGINT AS span_start,
+           (max(pos) + 8 - 1)::BIGINT AS span_end,
+           count(*)::BIGINT AS n_grams
+         FROM isl GROUP BY doc_id, grp
+         ORDER BY doc_id, span_start"""),
 
     // substring dedup's REMOVAL pass: rebuild every doc without its
     // repeated-span tokens (boilerplate-strip policy; canonical
     // whitespace; fully-covered docs keep an empty-string row) (oracled)
-    "dd_spans_cut" -> ((s, dir) => {
+    Entry("dd_spans_cut", (s, dir) => {
       val d = docs(s, dir)
       val spans = Dedup.repeatedSpans(d, "doc_id", "text", n = 8, minDocs = 2)
       Dedup.cutSpans(d, "doc_id", "text", spans)
         .select("doc_id", "text").orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH toks AS (
+           SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk
+           FROM documents),
+         grams AS (
+           SELECT doc_id, i.i AS pos,
+             md5(array_to_string(tk[(i.i + 1):(i.i + 8)], ' ')) AS g
+           FROM toks
+           CROSS JOIN unnest(range(0, greatest(0, len(tk) - 8 + 1))) AS i(i)),
+         rep AS (
+           SELECT g FROM grams GROUP BY g
+           HAVING count(DISTINCT doc_id) >= 2),
+         hits AS (SELECT doc_id, pos FROM grams JOIN rep USING (g)),
+         isl AS (
+           SELECT doc_id, pos,
+             pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos)
+               AS grp
+           FROM hits),
+         sp AS (
+           SELECT doc_id, min(pos) AS span_start, max(pos) + 8 - 1 AS span_end
+           FROM isl GROUP BY doc_id, grp),
+         kept AS (
+           SELECT t.doc_id, i.i AS pos, t.tk[i.i + 1] AS tok
+           FROM toks t
+           CROSS JOIN unnest(range(0, len(t.tk))) AS i(i)
+           WHERE NOT EXISTS (SELECT 1 FROM sp
+             WHERE sp.doc_id = t.doc_id
+               AND i.i BETWEEN sp.span_start AND sp.span_end)),
+         rebuilt AS (
+           SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS text
+           FROM kept GROUP BY doc_id)
+         SELECT d.doc_id, coalesce(r.text, '') AS text
+         FROM documents d LEFT JOIN rebuilt r USING (doc_id)
+         ORDER BY d.doc_id"""),
 
     // keep-one-copy substring dedup: the first (doc_id, span_start)
     // occurrence of each repeated passage survives, every other copy is
     // cut — the policy training pipelines actually run (oracled)
-    "dd_spans_keep1" -> ((s, dir) => {
+    Entry("dd_spans_keep1", (s, dir) => {
       val d = docs(s, dir)
       val spans = Dedup.repeatedSpans(d, "doc_id", "text", n = 8, minDocs = 2)
       val toCut = Dedup.dropKeptOccurrence(d, "doc_id", "text", spans)
       Dedup.cutSpans(d, "doc_id", "text", toCut)
         .select("doc_id", "text").orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH toks AS (
+           SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk
+           FROM documents),
+         grams AS (
+           SELECT doc_id, i.i AS pos,
+             md5(array_to_string(tk[(i.i + 1):(i.i + 8)], ' ')) AS g
+           FROM toks
+           CROSS JOIN unnest(range(0, greatest(0, len(tk) - 8 + 1))) AS i(i)),
+         rep AS (
+           SELECT g FROM grams GROUP BY g
+           HAVING count(DISTINCT doc_id) >= 2),
+         hits AS (SELECT doc_id, pos FROM grams JOIN rep USING (g)),
+         isl AS (
+           SELECT doc_id, pos,
+             pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos)
+               AS grp
+           FROM hits),
+         sp AS (
+           SELECT doc_id, min(pos) AS span_start, max(pos) + 8 - 1 AS span_end
+           FROM isl GROUP BY doc_id, grp),
+         spt AS (
+           SELECT sp.doc_id, sp.span_start, sp.span_end,
+             array_to_string(t.tk[(sp.span_start + 1):(sp.span_end + 1)], ' ')
+               AS passage
+           FROM sp JOIN toks t USING (doc_id)),
+         cut AS (
+           SELECT doc_id, span_start, span_end FROM (
+             SELECT doc_id, span_start, span_end,
+               row_number() OVER (PARTITION BY passage
+                 ORDER BY doc_id, span_start) AS rn
+             FROM spt)
+           WHERE rn > 1),
+         kept AS (
+           SELECT t.doc_id, i.i AS pos, t.tk[i.i + 1] AS tok
+           FROM toks t
+           CROSS JOIN unnest(range(0, len(t.tk))) AS i(i)
+           WHERE NOT EXISTS (SELECT 1 FROM cut
+             WHERE cut.doc_id = t.doc_id
+               AND i.i BETWEEN cut.span_start AND cut.span_end)),
+         rebuilt AS (
+           SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS text
+           FROM kept GROUP BY doc_id)
+         SELECT d.doc_id, coalesce(r.text, '') AS text
+         FROM documents d LEFT JOIN rebuilt r USING (doc_id)
+         ORDER BY d.doc_id"""),
 
     // deterministic weighted dataset mixing: en kept fully, zh halved,
     // de quartered, everything else at 10% — md5-coin per doc, so the
     // mix replays identically on any engine (oracled)
-    "ds_mix" -> ((s, dir) => {
+    Entry("ds_mix", (s, dir) => {
       Prep.weightedSample(docs(s, dir), "doc_id", "lang",
           Map("en" -> 1.0, "zh" -> 0.5, "de" -> 0.25),
           defaultWeight = 0.1)
         .select("doc_id", "lang").orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id, lang FROM documents
+         WHERE (('0x' || substr(md5('mix:' || doc_id::VARCHAR),1,8))
+                  ::BIGINT % 1000000)
+           < CASE lang WHEN 'en' THEN 1.0 WHEN 'zh' THEN 0.5
+                       WHEN 'de' THEN 0.25 ELSE 0.1 END * 1000000
+         ORDER BY doc_id"""),
 
     // JSONL ingest round-trip: documents -> line-delimited JSON ->
     // explicit-schema read -> per-lang aggregate; the oracle computes
     // the same aggregate from the parquet table, so a match certifies
     // escaping/type/line-splitting fidelity of the whole round trip
-    "ds_jsonl" -> ((s, dir) => {
+    Entry("ds_jsonl", (s, dir) => {
       jsonlDocs(s, dir).groupBy("lang").agg(
           count(lit(1)).as("n"),
           sum(col("n_chars")).as("sum_chars"),
           sum(length(col("text"))).cast("long").as("sum_text_len"))
         .orderBy("lang")
-    }),
+    }, oracle =
+      """SELECT lang, count(*)::BIGINT AS n,
+           CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+           CAST(sum(length(text)) AS BIGINT) AS sum_text_len
+         FROM documents GROUP BY lang ORDER BY lang"""),
 
     // keyed upsert: a recrawl batch (every 10th doc, revised text)
     // merges into the corpus — batch rows replace, new keys append;
     // md5(text) per surviving row certifies WHICH version won every
     // key, not just the row count (oracled — see [[Prep.upsert]])
-    "ds_upsert" -> ((s, dir) => {
+    Entry("ds_upsert", (s, dir) => {
       val d = docs(s, dir)
       val batch = d.filter(col("doc_id") % 10 === 0)
         .withColumn("text", concat(col("text"), lit(" [rev2]")))
@@ -414,33 +594,65 @@ object Pipeline {
         .select(col("doc_id"), col("n_chars"),
           md5(col("text")).as("content_hash"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH batch AS (
+           SELECT doc_id, text || ' [rev2]' AS text,
+             length(text || ' [rev2]')::BIGINT AS n_chars
+           FROM documents WHERE doc_id % 10 = 0),
+         merged AS (
+           SELECT doc_id, text, n_chars FROM documents
+           WHERE doc_id % 10 <> 0
+           UNION ALL SELECT doc_id, text, n_chars FROM batch)
+         SELECT doc_id, n_chars, md5(text) AS content_hash
+         FROM merged ORDER BY doc_id"""),
 
     // schema-evolution scan: two parquet generations (v1 without
     // source/n_chars, v2 full) reconciled by one mergeSchema read;
     // count(source) isolates the null-back-filled v1 rows, so the
     // aggregate certifies the reconciliation itself (oracled — see
     // [[evolveDocs]])
-    "ds_evolve" -> ((s, dir) => {
+    Entry("ds_evolve", (s, dir) => {
       evolveDocs(s, dir).groupBy("lang").agg(
           count(lit(1)).as("n"),
           count(col("source")).as("n_v2"),
           sum(col("n_chars")).as("sum_chars_v2"),
           sum(length(col("text"))).cast("long").as("sum_text_len"))
         .orderBy("lang")
-    }),
+    }, oracle =
+      """WITH v1 AS (SELECT doc_id, text, lang FROM documents
+                     WHERE doc_id % 2 = 0),
+         v2 AS (SELECT doc_id, text, lang, source, n_chars
+                FROM documents WHERE doc_id % 2 = 1),
+         merged AS (
+           SELECT doc_id, text, lang, NULL AS source, NULL AS n_chars
+           FROM v1
+           UNION ALL
+           SELECT doc_id, text, lang, source, n_chars FROM v2)
+         SELECT lang, count(*)::BIGINT AS n,
+           count(source)::BIGINT AS n_v2,
+           CAST(sum(n_chars) AS BIGINT) AS sum_chars_v2,
+           CAST(sum(length(text)) AS BIGINT) AS sum_text_len
+         FROM merged GROUP BY lang ORDER BY lang"""),
 
     // per-domain frequency cap: at most 15 docs per source, keeping the
     // highest-quality ones — the C4/Gopher-style domain rebalancing
     // step; WindowGroupLimit makes the plain window the bounded-shuffle
     // plan (pinned in PlanAuditSpec) (oracled)
-    "ds_cap_source" -> ((s, dir) => {
+    Entry("ds_cap_source", (s, dir) => {
       val d = docs(s, dir).withColumn("quality",
         TextAnalysis.qualityScore(col("text")))
       Prep.capPerGroup(d, "source", 15,
           Seq(col("quality").desc, col("doc_id").asc))
         .select("doc_id", "source", "quality").orderBy("doc_id")
-    }),
+    }, oracle =
+      s"""WITH $QualityBaseCtes,
+         qual AS (SELECT doc_id, $QualityExprSql AS quality FROM base),
+         ranked AS (SELECT d.doc_id, d.source, q.quality,
+             row_number() OVER (PARTITION BY d.source
+               ORDER BY q.quality DESC, d.doc_id ASC) AS rn
+           FROM documents d JOIN qual q USING (doc_id))
+         SELECT doc_id, source, quality FROM ranked
+         WHERE rn <= 15 ORDER BY doc_id"""),
 
     // per-language ADAPTIVE quality gate: keep docs at/above their own
     // language's 25th quality percentile — language quality
@@ -448,7 +660,7 @@ object Pipeline {
     // all of them. percent_rank over a unique (quality, doc_id) order
     // is deterministic cross-engine; one window shuffle on lang
     // (oracled)
-    "ds_gate_quantile" -> ((s, dir) => {
+    Entry("ds_gate_quantile", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val d = docs(s, dir).withColumn("quality",
         TextAnalysis.qualityScore(col("text")))
@@ -457,14 +669,22 @@ object Pipeline {
       d.withColumn("pr", percent_rank().over(w))
         .filter(col("pr") >= 0.25)
         .select("doc_id", "lang").orderBy("doc_id")
-    }),
+    }, oracle =
+      s"""WITH $QualityBaseCtes,
+         qual AS (SELECT doc_id, $QualityExprSql AS quality FROM base),
+         ranked AS (SELECT d.doc_id, d.lang,
+             percent_rank() OVER (PARTITION BY d.lang
+               ORDER BY q.quality ASC, d.doc_id ASC) AS pr
+           FROM documents d JOIN qual q USING (doc_id))
+         SELECT doc_id, lang FROM ranked
+         WHERE pr >= 0.25 ORDER BY doc_id"""),
 
     // per-language token-budget admission: best-quality-first until the
     // language's budget is spent — the data-mixing step that holds each
     // language to its allocation. Start-offset semantics (the straddling
     // doc is admitted), packSequences' convention; the running sum is
     // one window shuffle on lang (oracled)
-    "ds_token_budget" -> ((s, dir) => {
+    Entry("ds_token_budget", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val d = docs(s, dir).withColumn("quality",
         TextAnalysis.qualityScore(col("text")))
@@ -474,10 +694,20 @@ object Pipeline {
       d.withColumn("spent", coalesce(sum(col("n_chars")).over(w), lit(0L)))
         .filter(col("spent") < 20000L)
         .select("doc_id", "lang", "n_chars").orderBy("doc_id")
-    }),
+    }, oracle =
+      s"""WITH $QualityBaseCtes,
+         qual AS (SELECT doc_id, $QualityExprSql AS quality FROM base),
+         ranked AS (SELECT d.doc_id, d.lang, d.n_chars,
+             coalesce(sum(d.n_chars) OVER (PARTITION BY d.lang
+               ORDER BY q.quality DESC, d.doc_id ASC
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+               0)::BIGINT AS spent
+           FROM documents d JOIN qual q USING (doc_id))
+         SELECT doc_id, lang, n_chars FROM ranked
+         WHERE spent < 20000 ORDER BY doc_id"""),
 
     // embedding near-dup pairs, brute-force verified (oracled)
-    "dd_embed_pairs" -> ((s, dir) => {
+    Entry("dd_embed_pairs", (s, dir) => {
       import graft.functions.VectorFunctions._
       val e = embs(s, dir)
       val a = e.select(col("vec_id").as("id_a"), col("embedding").as("va"),
@@ -490,25 +720,32 @@ object Pipeline {
         .filter(col("cosine") >= 0.45)
         .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
         .orderBy("id_a", "id_b")
-    }),
+    }, oracle =
+      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)
+         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+           round(list_cosine_similarity(a.e, b.e), 4) AS cosine
+         FROM v a JOIN v b ON a.vec_id < b.vec_id
+         WHERE list_cosine_similarity(a.e, b.e) >= 0.45
+         ORDER BY id_a, id_b"""),
 
     // embedding near-dup pairs via hyperplane LSH (md5-derived planes ->
     // fully oracled; recall<1 vs dd_embed_pairs by design — the scale path)
-    "dd_embed_lsh" -> ((s, dir) => {
+    Entry("dd_embed_lsh", (s, dir) => {
       Dedup.embeddingPairs(embs(s, dir), "vec_id", "embedding",
           threshold = 0.3, tables = 8, bits = 8, mode = HashMode.Md5)
         .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
         .orderBy("id_a", "id_b")
-    }),
+    }, oracle =
+      embedLshOracleSql(tables = 8, bits = 8, threshold = 0.3)),
 
     // SemDeDup: k-means clusters as the blocking structure, drop the
     // more-central member of every within-cluster high-cosine pair —
     // the full keep/drop decision table is oracled, k-means included
-    "dd_semantic" -> ((s, dir) => {
+    Entry("dd_semantic", (s, dir) => {
       Dedup.semanticDedup(embs(s, dir), "vec_id", "embedding",
           k = 4, iters = 2, threshold = 0.4)
         .orderBy("vec_id")
-    }),
+    }, oracle = semanticOracleSql(k = 4, iters = 2, threshold = 0.4)),
 
     // brute-force cosine top-k ANN baseline (oracled). The workload is
     // all-pairs corpus self-ANN — neighbors for EVERY vector, the
@@ -519,30 +756,54 @@ object Pipeline {
     // otherwise serialize the whole n^2 cosine scan in one task;
     // explicit numPartitions exempts the exchange from AQE size-based
     // coalescing, which cannot see compute density).
-    "sim_topk" -> ((s, dir) => {
+    Entry("sim_topk", (s, dir) => {
       val e = embs(s, dir)
       Similarity.bruteForceTopK(corpusPar(e), e, "vec_id", "embedding",
           k = 5)
         .select(col("query_id"), col("neighbor_id"),
           round(col("cosine"), 4).as("cosine"))
         .orderBy("query_id", "neighbor_id")
-    }),
+    }, oracle =
+      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+         scored AS (
+           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+             list_cosine_similarity(q.e, c.e) AS cos
+           FROM v q JOIN v c ON c.vec_id != q.vec_id),
+         ranked AS (
+           SELECT query_id, neighbor_id, cos,
+             row_number() OVER (PARTITION BY query_id
+               ORDER BY cos DESC, neighbor_id ASC) AS rn
+           FROM scored)
+         SELECT query_id, neighbor_id, round(cos, 4) AS cosine
+         FROM ranked WHERE rn <= 5 ORDER BY query_id, neighbor_id"""),
 
     // int8-quantized brute-force ANN: same workload as sim_topk but over
     // 4x-smaller tinyint vectors — scales cancel in cosine, so no
     // dequantize step anywhere (oracled: the floor-based quantization
     // replays exactly in DuckDB)
-    "sim_topk_q8" -> ((s, dir) => {
+    Entry("sim_topk_q8", (s, dir) => {
       val q8 = Similarity.quantizeInt8(embs(s, dir), "vec_id", "embedding")
       Similarity.bruteForceTopK(corpusPar(q8), q8, "vec_id", "qvec", k = 5)
         .select(col("query_id"), col("neighbor_id"),
           round(col("cosine"), 4).as("cosine"))
         .orderBy("query_id", "neighbor_id")
-    }),
+    }, oracle =
+      s"""WITH $Q8Ctes,
+         scored AS (
+           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+             list_cosine_similarity(q.qv, c.qv) AS cos
+           FROM qv q JOIN qv c ON c.vec_id != q.vec_id),
+         ranked AS (
+           SELECT query_id, neighbor_id, cos,
+             row_number() OVER (PARTITION BY query_id
+               ORDER BY cos DESC, neighbor_id ASC) AS rn
+           FROM scored)
+         SELECT query_id, neighbor_id, round(cos, 4) AS cosine
+         FROM ranked WHERE rn <= 5 ORDER BY query_id, neighbor_id"""),
 
     // quantization loss, measured: recall@5 of the int8 path against the
     // float32 exact top-5, banded like sim_recall (oracled)
-    "sim_recall_q8" -> ((s, dir) => {
+    Entry("sim_recall_q8", (s, dir) => {
       val e = embs(s, dir)
       val ep = corpusPar(e)
       val brute = Similarity.bruteForceTopK(ep, e, "vec_id", "embedding", k = 5)
@@ -558,19 +819,47 @@ object Pipeline {
         .withColumn("recall",
           round(col("n_hit").cast("double") / col("k"), 4))
         .orderBy("band")
-    }),
+    }, oracle =
+      s"""WITH $Q8Ctes,
+         q8s AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                   list_cosine_similarity(q.qv, c.qv) AS cos
+                 FROM qv q JOIN qv c ON c.vec_id != q.vec_id),
+         q8r AS (SELECT query_id, neighbor_id,
+                   row_number() OVER (PARTITION BY query_id
+                     ORDER BY cos DESC, neighbor_id ASC) AS rn
+                 FROM q8s),
+         q8 AS (SELECT query_id, neighbor_id FROM q8r WHERE rn <= 5),
+         bs AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                  list_cosine_similarity(q.e, c.e) AS cos
+                FROM emb q JOIN emb c ON c.vec_id != q.vec_id),
+         br AS (SELECT query_id, neighbor_id,
+                  row_number() OVER (PARTITION BY query_id
+                    ORDER BY cos DESC, neighbor_id ASC) AS rn
+                FROM bs),
+         brute AS (SELECT query_id, neighbor_id FROM br WHERE rn <= 5)
+         SELECT b.query_id % 32 AS band, count(*) AS k,
+           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
+             AS n_hit,
+           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
+             END)::DOUBLE / count(*), 4) AS recall
+         FROM brute b LEFT JOIN q8 l
+           ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
+         GROUP BY b.query_id % 32 ORDER BY band"""),
 
     // product-quantization ANN: corpus encoded to m=4 one-byte codes per
     // vector (64x smaller than float32 at dim 64 — the memory-bound end
     // of the ANN family), scored by ADC lookup sums. Fully oracled: the
     // per-subspace k-means trajectories, the encode, and the 4dp-ranked
     // ADC cut all replay in DuckDB (the sim_kmeans unrolling pattern)
-    "sim_topk_pq" -> ((s, dir) => {
+    Entry("sim_topk_pq", (s, dir) => {
       val e = embs(s, dir)
       Similarity.pqTopK(corpusPar(e), e, "vec_id", "embedding",
           pqBooks(s, dir), k = 5)
         .orderBy("query_id", "neighbor_id")
-    }),
+    }, oracle =
+      s"""WITH ${pqCtes(PqM, PqKsub, PqIters)}
+         SELECT query_id, neighbor_id, cosine
+         FROM pranked WHERE rn <= 5 ORDER BY query_id, neighbor_id"""),
 
     // quantization loss of the PQ path: recall@5 vs exact float32 top-5,
     // banded like sim_recall_q8. The coarse 4x8 codebook (12 bits/vector)
@@ -578,7 +867,7 @@ object Pipeline {
     // trade, and the shortlist re-rank in pqTopK is the production lever
     // that buys recall back (spec-pinned; oracling it would just replay
     // the brute oracle)
-    "sim_recall_pq" -> ((s, dir) => {
+    Entry("sim_recall_pq", (s, dir) => {
       val e = embs(s, dir)
       val ep = corpusPar(e)
       val brute = Similarity.bruteForceTopK(ep, e, "vec_id", "embedding",
@@ -594,7 +883,25 @@ object Pipeline {
         .withColumn("recall",
           round(col("n_hit").cast("double") / col("k"), 4))
         .orderBy("band")
-    }),
+    }, oracle =
+      s"""WITH ${pqCtes(PqM, PqKsub, PqIters)},
+         pq5 AS (SELECT query_id, neighbor_id FROM pranked WHERE rn <= 5),
+         bs AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                  list_cosine_similarity(q.e, c.e) AS cos
+                FROM emb q JOIN emb c ON c.vec_id != q.vec_id),
+         br AS (SELECT query_id, neighbor_id,
+                  row_number() OVER (PARTITION BY query_id
+                    ORDER BY cos DESC, neighbor_id ASC) AS rn
+                FROM bs),
+         brute AS (SELECT query_id, neighbor_id FROM br WHERE rn <= 5)
+         SELECT b.query_id % 32 AS band, count(*) AS k,
+           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
+             AS n_hit,
+           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
+             END)::DOUBLE / count(*), 4) AS recall
+         FROM brute b LEFT JOIN pq5 l
+           ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
+         GROUP BY b.query_id % 32 ORDER BY band"""),
 
     // the recall lever, measured: same coarse codes, but pqTopK's
     // production path — ADC shortlist of 50, exact cosine re-rank of
@@ -602,7 +909,7 @@ object Pipeline {
     // vectors touched |queries| x 50 times). Oracled end to end: the
     // shortlist cut ranks the 4dp ADC estimate, the re-rank the raw
     // cosine, both with id tie-breaks
-    "sim_recall_pq_rerank" -> ((s, dir) => {
+    Entry("sim_recall_pq_rerank", (s, dir) => {
       val e = embs(s, dir)
       val ep = corpusPar(e)
       val brute = Similarity.bruteForceTopK(ep, e, "vec_id", "embedding",
@@ -618,20 +925,57 @@ object Pipeline {
         .withColumn("recall",
           round(col("n_hit").cast("double") / col("k"), 4))
         .orderBy("band")
-    }),
+    }, oracle =
+      s"""WITH ${pqCtes(PqM, PqKsub, PqIters)},
+         rcand AS (SELECT query_id, neighbor_id FROM pranked
+                   WHERE rn <= $PqShortlist),
+         rex AS (SELECT r.query_id, r.neighbor_id,
+                   list_cosine_similarity(qe.e, ce.e) AS cos
+                 FROM rcand r JOIN emb qe ON qe.vec_id = r.query_id
+                 JOIN emb ce ON ce.vec_id = r.neighbor_id),
+         rrank AS (SELECT query_id, neighbor_id,
+                     row_number() OVER (PARTITION BY query_id
+                       ORDER BY cos DESC, neighbor_id ASC) AS rn
+                   FROM rex),
+         pqr AS (SELECT query_id, neighbor_id FROM rrank WHERE rn <= 5),
+         bs AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                  list_cosine_similarity(q.e, c.e) AS cos
+                FROM emb q JOIN emb c ON c.vec_id != q.vec_id),
+         br AS (SELECT query_id, neighbor_id,
+                  row_number() OVER (PARTITION BY query_id
+                    ORDER BY cos DESC, neighbor_id ASC) AS rn
+                FROM bs),
+         brute AS (SELECT query_id, neighbor_id FROM br WHERE rn <= 5)
+         SELECT b.query_id % 32 AS band, count(*) AS k,
+           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
+             AS n_hit,
+           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
+             END)::DOUBLE / count(*), 4) AS recall
+         FROM brute b LEFT JOIN pqr l
+           ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
+         GROUP BY b.query_id % 32 ORDER BY band"""),
 
     // IVF-PQ: the composed billion-scale index (FAISS's default layout)
     // — nProbe inverted lists bound WHICH code rows a query touches, PQ
     // bounds the BYTES each costs. Fully oracled: label-centroid lists
     // (the sim_topk_ivf chain) restrict the PQ ADC pair space via the
     // injected candidate CTE, same 4dp-ranked cut
-    "sim_topk_ivfpq" -> ((s, dir) => {
+    Entry("sim_topk_ivfpq", (s, dir) => {
       val e = embs(s, dir)
       Similarity.ivfPqTopK(e, e.filter(col("vec_id") < 8), "vec_id",
           "embedding", ivfCentroids(e), pqBooks(s, dir), k = 5,
           nProbe = 3)
         .orderBy("query_id", "neighbor_id")
-    }),
+    }, oracle =
+      s"""WITH $ivfBaseCtes,
+         probes AS (SELECT query_id, cid FROM probes_ranked
+                    WHERE rn <= 3),
+         ${pqCtes(PqM, PqKsub, PqIters, emitEmb = false, candCte = Some(
+           """cand AS (SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
+              FROM probes p JOIN assign a ON a.cid = p.cid
+              WHERE a.vec_id != p.query_id)"""))}
+         SELECT query_id, neighbor_id, cosine
+         FROM pranked WHERE rn <= 5 ORDER BY query_id, neighbor_id"""),
 
     // RESIDUAL IVF-PQ (r13): the production IVF-PQ — codebooks trained
     // on the residuals to the coarse centroids, so the m bytes per
@@ -642,13 +986,17 @@ object Pipeline {
     // k-means trajectories over residuals, encode, per-subspace
     // reconstruction norms, and the floor-4dp composed cut all replay
     // in DuckDB
-    "sim_topk_ivfpq_res" -> ((s, dir) => {
+    Entry("sim_topk_ivfpq_res", (s, dir) => {
       val e = embs(s, dir)
       Similarity.ivfPqResidualTopK(e, e.filter(col("vec_id") < 8),
           "vec_id", "embedding", ivfCentroids(e), resBooks(s, dir),
           k = 5, nProbe = 3)
         .orderBy("query_id", "neighbor_id")
-    }),
+    }, oracle =
+      s"""WITH $ivfBaseCtes,
+         ${residualIvfPqCtes(PqM, PqKsub, PqIters, nProbe = 3)}
+         SELECT query_id, neighbor_id, cosine
+         FROM rranked WHERE rn <= 5 ORDER BY query_id, neighbor_id"""),
 
     // incremental append to the residual IVF-PQ artifact (r14): half
     // the corpus is indexed from scratch, the other half arrives as a
@@ -659,7 +1007,7 @@ object Pipeline {
     // the oracle computes (same SQL as sim_topk_ivfpq_res) — so a green
     // row certifies FAISS-style add-with-ids, the operation that makes
     // the index affordable when a 100 TB corpus grows
-    "sim_topk_ivfpq_res_inc" -> ((s, dir) => {
+    Entry("sim_topk_ivfpq_res_inc", (s, dir) => {
       val e = embs(s, dir)
       val path = scratchPath("graft_respq_inc", dir)
       Similarity.writeIvfPqResidualIndex(
@@ -674,7 +1022,14 @@ object Pipeline {
           "vec_id", "embedding", idx.centroids, idx.books, k = 5,
           nProbe = 3, prebuiltCodes = Some(idx.codes))
         .orderBy("query_id", "neighbor_id")
-    }),
+    }, oracle =
+      // the incremental-append row's oracle IS the from-scratch residual
+      // chain on the full corpus: base+appended codes matching it is the
+      // property the row certifies
+      s"""WITH $ivfBaseCtes,
+         ${residualIvfPqCtes(PqM, PqKsub, PqIters, nProbe = 3)}
+         SELECT query_id, neighbor_id, cosine
+         FROM rranked WHERE rn <= 5 ORDER BY query_id, neighbor_id"""),
 
     // deletion from the residual IVF-PQ artifact (r15): the index is
     // built on the FULL corpus, then the odd-id half is deleted
@@ -687,7 +1042,7 @@ object Pipeline {
     // certifies that deleted ids are truly gone and the surviving
     // codes still rank identically (nothing re-encoded, nothing
     // mis-scored)
-    "sim_topk_ivfpq_res_del" -> ((s, dir) => {
+    Entry("sim_topk_ivfpq_res_del", (s, dir) => {
       val e = embs(s, dir)
       val path = scratchPath("graft_respq_del", dir)
       Similarity.writeIvfPqResidualIndex(e, "vec_id", "embedding",
@@ -704,7 +1059,20 @@ object Pipeline {
           "vec_id", "embedding", idx.centroids, idx.books, k = 5,
           nProbe = 3, prebuiltCodes = Some(idx.codes))
         .orderBy("query_id", "neighbor_id")
-    }),
+    }, oracle =
+      // the deletion row's oracle IS the from-scratch residual chain on
+      // the full corpus with the candidate space restricted to the
+      // SURVIVING (even-id) neighbors before the top-5 cut: cents/books
+      // were trained on the full corpus and a delete never re-encodes,
+      // so survivors must score exactly as they did pre-delete
+      s"""WITH $ivfBaseCtes,
+         ${residualIvfPqCtes(PqM, PqKsub, PqIters, nProbe = 3)}
+         SELECT query_id, neighbor_id, cosine FROM (
+           SELECT query_id, neighbor_id, cosine,
+             row_number() OVER (PARTITION BY query_id
+               ORDER BY cosine DESC, neighbor_id ASC) AS rn2
+           FROM rscored WHERE neighbor_id % 2 = 0)
+         WHERE rn2 <= 5 ORDER BY query_id, neighbor_id"""),
 
     // the recall lever on the residual index (r14): ADC shortlist of 50
     // through ivfPqResidualTopK's production path, exact cosine re-rank
@@ -712,7 +1080,7 @@ object Pipeline {
     // the residual chain, oracled end to end (residual trajectory,
     // shortlist cut on the floor-4dp estimate, raw-cosine re-rank, both
     // with id tie-breaks)
-    "sim_recall_ivfpq_res_rerank" -> ((s, dir) => {
+    Entry("sim_recall_ivfpq_res_rerank", (s, dir) => {
       val e = embs(s, dir)
       val q = e.filter(col("vec_id") < 8)
       val brute = Similarity.bruteForceTopK(e, q, "vec_id", "embedding",
@@ -729,14 +1097,44 @@ object Pipeline {
         .withColumn("recall",
           round(col("n_hit").cast("double") / col("k"), 4))
         .orderBy("band")
-    }),
+    }, oracle =
+      s"""WITH $ivfBaseCtes,
+         ${residualIvfPqCtes(PqM, PqKsub, PqIters, nProbe = 3)},
+         rcand AS (SELECT query_id, neighbor_id FROM rranked
+                   WHERE rn <= $PqShortlist),
+         rex AS (SELECT r.query_id, r.neighbor_id,
+                   list_cosine_similarity(qe.e, ce.e) AS cos
+                 FROM rcand r JOIN emb qe ON qe.vec_id = r.query_id
+                 JOIN emb ce ON ce.vec_id = r.neighbor_id),
+         rrank2 AS (SELECT query_id, neighbor_id,
+                      row_number() OVER (PARTITION BY query_id
+                        ORDER BY cos DESC, neighbor_id ASC) AS rn
+                    FROM rex),
+         ipqr AS (SELECT query_id, neighbor_id FROM rrank2 WHERE rn <= 5),
+         bs AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                  list_cosine_similarity(q.e, c.e) AS cos
+                FROM emb q JOIN emb c ON c.vec_id != q.vec_id
+                WHERE q.vec_id < 8),
+         br AS (SELECT query_id, neighbor_id,
+                  row_number() OVER (PARTITION BY query_id
+                    ORDER BY cos DESC, neighbor_id ASC) AS rn
+                FROM bs),
+         brute AS (SELECT query_id, neighbor_id FROM br WHERE rn <= 5)
+         SELECT b.query_id AS band, count(*) AS k,
+           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
+             AS n_hit,
+           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
+             END)::DOUBLE / count(*), 4) AS recall
+         FROM brute b LEFT JOIN ipqr l
+           ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
+         GROUP BY b.query_id ORDER BY band"""),
 
     // the same ADC search through the MATERIALIZED index path: books +
     // codes written to parquet with geometry/provenance stamps, read
     // back (stamps demanded), probed — the dd_incremental_idx pattern
     // for ANN. Same oracle as sim_topk_pq: what this row certifies is
     // the artifact round trip, not a new algorithm
-    "sim_topk_pq_idx" -> ((s, dir) => {
+    Entry("sim_topk_pq_idx", (s, dir) => {
       val e = embs(s, dir)
       val path = scratchPath("graft_pq_index", dir)
       Similarity.writePqIndex(e, "vec_id", "embedding", pqBooks(s, dir),
@@ -745,22 +1143,31 @@ object Pipeline {
       Similarity.pqTopK(corpusPar(e), e, "vec_id", "embedding", idx.books,
           k = 5, prebuiltCodes = Some(idx.codes))
         .orderBy("query_id", "neighbor_id")
-    }),
+    }, oracle =
+      // identical oracle to sim_topk_pq on purpose: the Spark side's
+      // parquet round trip must be value-invisible
+      s"""WITH ${pqCtes(PqM, PqKsub, PqIters)}
+         SELECT query_id, neighbor_id, cosine
+         FROM pranked WHERE rn <= 5 ORDER BY query_id, neighbor_id"""),
 
     // label centroids: grouped vector mean (oracled on first components)
-    "sim_centroids" -> ((s, dir) => {
+    Entry("sim_centroids", (s, dir) => {
       Similarity.labelCentroids(embs(s, dir), "label", "embedding")
         .select(col("label"), col("n"),
           round(element_at(col("centroid"), 1), 6).as("c1"),
           round(element_at(col("centroid"), 2), 6).as("c2"))
         .orderBy("label")
-    }),
+    }, oracle =
+      """SELECT label, count(*) AS n,
+           round(sum(embedding[1]::DOUBLE) / count(*), 6) AS c1,
+           round(sum(embedding[2]::DOUBLE) / count(*), 6) AS c2
+         FROM embeddings GROUP BY label ORDER BY label"""),
 
     // count-min sketch: term frequencies estimated from a 3x64 counter
     // grid vs exact counts — md5 hashes make the sketch itself
     // bit-replicable, so the oracle checks exact values, not just the
     // error bound (est >= exact always; overcount = collisions)
-    "sk_cms" -> ((s, dir) => {
+    Entry("sk_cms", (s, dir) => {
       val toks = docs(s, dir)
         .select(explode(TextAnalysis.tokens(col("text"))).as("term"))
       val sketch = Sketches.countMin(toks, "term", width = 64, depth = 3)
@@ -771,19 +1178,65 @@ object Pipeline {
         .select(col("term"), col("est"), col("exact"),
           (col("est") - col("exact")).as("overcount"))
         .orderBy("term")
-    }),
+    }, oracle =
+      """WITH tok AS (
+           SELECT unnest(string_split_regex(trim(text), '\s+')) AS term
+           FROM documents),
+         buckets AS (
+           SELECT term, d.d AS d,
+             ('0x' || substr(md5('cm:' || d.d::VARCHAR || ':' || term),1,8))
+               ::BIGINT % 64 AS bucket
+           FROM tok CROSS JOIN unnest(range(0,3)) AS d(d)),
+         sketch AS (
+           SELECT d, bucket, count(*)::BIGINT AS cnt
+           FROM buckets GROUP BY d, bucket),
+         exact AS (
+           SELECT term, count(*)::BIGINT AS exact FROM tok GROUP BY term),
+         probe AS (
+           SELECT e.term, d.d AS d,
+             ('0x' || substr(md5('cm:' || d.d::VARCHAR || ':' || e.term),1,8))
+               ::BIGINT % 64 AS bucket
+           FROM exact e CROSS JOIN unnest(range(0,3)) AS d(d)),
+         est AS (
+           SELECT p.term, min(coalesce(s.cnt, 0))::BIGINT AS est
+           FROM probe p LEFT JOIN sketch s USING (d, bucket)
+           GROUP BY p.term)
+         SELECT est.term, est, exact, (est - exact)::BIGINT AS overcount
+         FROM est JOIN exact USING (term) ORDER BY term"""),
 
     // Bloom filter semi-join reduction: 512-bit filter over the doc_id<100
     // member set probed by the whole corpus — no false negatives, a
     // deterministic (md5) set of false positives the oracle reproduces
-    "sk_bloom" -> ((s, dir) => {
+    Entry("sk_bloom", (s, dir) => {
       val d = docs(s, dir).select("doc_id")
       val members = d.filter(col("doc_id") < 100)
       val bf = Sketches.bloomBuild(members, "doc_id", bits = 512, k = 3)
       Sketches.bloomMightContain(bf, d, "doc_id", bits = 512, k = 3)
         .withColumn("in_set", col("doc_id") < 100)
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH mem AS (SELECT doc_id FROM documents WHERE doc_id < 100),
+         mpos AS (
+           SELECT ('0x' || substr(md5('bf:' || h.h::VARCHAR || ':'
+               || doc_id::VARCHAR),1,8))::BIGINT % 512 AS pos
+           FROM mem CROSS JOIN unnest(range(0,3)) AS h(h)),
+         filt AS (
+           SELECT pos // 32 AS word,
+             bit_or(1::BIGINT << (pos % 32)::INT) AS mask
+           FROM mpos GROUP BY word),
+         ppos AS (
+           SELECT doc_id,
+             ('0x' || substr(md5('bf:' || h.h::VARCHAR || ':'
+               || doc_id::VARCHAR),1,8))::BIGINT % 512 AS pos
+           FROM documents CROSS JOIN unnest(range(0,3)) AS h(h)),
+         hits AS (
+           SELECT doc_id,
+             (coalesce(f.mask, 0) & (1::BIGINT << (p.pos % 32)::INT)) <> 0
+               AS hit
+           FROM ppos p LEFT JOIN filt f ON f.word = p.pos // 32)
+         SELECT doc_id, bool_and(hit) AS might_contain,
+           doc_id < 100 AS in_set
+         FROM hits GROUP BY doc_id ORDER BY doc_id"""),
 
     // HyperLogLog cardinality: vocabulary size of the documents corpus
     // estimated from 512 registers vs the exact distinct count — the
@@ -794,7 +1247,7 @@ object Pipeline {
     // term a dyadic rational, total < 53 significand bits); est/err
     // round at 2dp to absorb the one nondeterminism left (ln differing
     // by an ulp between libm and the JVM).
-    "sk_hll" -> ((s, dir) => {
+    Entry("sk_hll", (s, dir) => {
       // two keyed sets so BOTH estimator branches are oracled: the
       // small synthetic vocabulary lands in linear counting (v_zero
       // large), the doc-id set (n >> 2.5m/alpha) in the raw harmonic
@@ -817,7 +1270,47 @@ object Pipeline {
           "term")
         .unionByName(row("doc_ids", d.select(col("doc_id")), "doc_id"))
         .orderBy("what")
-    }),
+    }, oracle =
+      """WITH keyed AS (
+           SELECT 'vocab' AS what,
+             unnest(string_split_regex(trim(text), '\s+')) AS k
+           FROM documents
+           UNION ALL
+           SELECT 'doc_ids' AS what, doc_id::VARCHAR AS k
+           FROM documents),
+         h AS (
+           SELECT what,
+             ('0x' || substr(md5('hl:r:' || k),1,8))::BIGINT % 512
+               AS register,
+             ('0x' || substr(md5('hl:w:' || k),1,8))::BIGINT AS w
+           FROM keyed),
+         r AS (
+           SELECT what, register,
+             max(CASE WHEN w = 0 THEN 33
+                      ELSE 33 - length(bin(w)) END) AS maxrho
+           FROM h GROUP BY what, register),
+         agg AS (
+           SELECT what, count(*) AS present,
+             coalesce(sum(1.0 / (1::BIGINT << maxrho)), 0.0) AS sp
+           FROM r GROUP BY what),
+         est AS (
+           SELECT what, (512 - present) AS v_zero,
+             sp + (512 - present) AS sum_inv,
+             CASE WHEN (0.7213 / (1 + 1.079/512)) * 512 * 512
+                         / (sp + (512 - present)) <= 2.5 * 512
+                       AND present < 512
+                  THEN 512 * ln(512.0 / (512 - present))
+                  ELSE (0.7213 / (1 + 1.079/512)) * 512 * 512
+                         / (sp + (512 - present)) END AS e
+           FROM agg),
+         x AS (SELECT what, count(DISTINCT k) AS exact_distinct
+               FROM keyed GROUP BY what)
+         SELECT est.what, 512::BIGINT AS m, v_zero::BIGINT AS v_zero,
+           round(sum_inv, 6) AS sum_inv, round(e, 2) AS est_hll,
+           exact_distinct::BIGINT AS exact_distinct,
+           round(abs(e - exact_distinct) / exact_distinct * 100, 2)
+             AS err_pct
+         FROM est JOIN x USING (what) ORDER BY what"""),
 
     // 64-bit HyperLogLog (r18, r17 verdict #5): the production-range
     // twin (hllSketch64, ~10^18 ceiling) oracled with the same sk_hll
@@ -827,7 +1320,7 @@ object Pipeline {
     // moved to a scaled-integer form whose int->double conversion is
     // correctly rounded in both engines (Sketches.scala scaladoc).
     // Same two keyed sets so BOTH estimator branches are oracled.
-    "sk_hll64" -> ((s, dir) => {
+    Entry("sk_hll64", (s, dir) => {
       def row(what: String, keyed: DataFrame, keyCol: String) =
         Sketches.hllEstimate(Sketches.hllSketch64(keyed, keyCol, m = 512))
           .crossJoin(keyed.agg(countDistinct(col(keyCol)).cast("long")
@@ -846,38 +1339,121 @@ object Pipeline {
           "term")
         .unionByName(row("doc_ids", d.select(col("doc_id")), "doc_id"))
         .orderBy("what")
-    }),
+    }, oracle =
+      // the 64-bit twin replayed from the md5 two-slice: hi/lo are the
+      // first/second 8 hex digits of md5('hl64:'||k); register = low 9
+      // bits of the 64-bit value (= lo % 512), rho = 65 - bitlength(h)
+      // capped at 56 (the w == 0 case). The present-register sum rides
+      // as the scaled integer sum(2^(56-maxrho)) (DuckDB sums BIGINT
+      // into HUGEINT — no overflow) and converts to double ONCE, exactly
+      // mirroring hllEstimate's decimal-sum -> double -> /2^56 chain, so
+      // sum_inv is the same double bit pattern in both engines
+      """WITH keyed AS (
+           SELECT 'vocab' AS what,
+             unnest(string_split_regex(trim(text), '\s+')) AS k
+           FROM documents
+           UNION ALL
+           SELECT 'doc_ids' AS what, doc_id::VARCHAR AS k
+           FROM documents),
+         h AS (
+           SELECT what,
+             ('0x' || substr(md5('hl64:' || k),1,8))::BIGINT AS hi,
+             ('0x' || substr(md5('hl64:' || k),9,8))::BIGINT AS lo
+           FROM keyed WHERE k IS NOT NULL),
+         bl AS (
+           SELECT what, lo % 512 AS register,
+             CASE WHEN hi > 0 THEN 32 + length(bin(hi))
+                  WHEN lo > 0 THEN length(bin(lo)) ELSE 0 END AS bitlen
+           FROM h),
+         r AS (
+           SELECT what, register,
+             max(CASE WHEN bitlen > 9 THEN 65 - bitlen ELSE 56 END)
+               AS maxrho
+           FROM bl GROUP BY what, register),
+         agg AS (
+           SELECT what, count(*) AS present,
+             sum(1::BIGINT << (56 - maxrho))::DOUBLE
+               / 72057594037927936.0 AS sp
+           FROM r GROUP BY what),
+         est AS (
+           SELECT what, (512 - present) AS v_zero,
+             sp + (512 - present) AS sum_inv,
+             CASE WHEN (0.7213 / (1 + 1.079/512)) * 512 * 512
+                         / (sp + (512 - present)) <= 2.5 * 512
+                       AND present < 512
+                  THEN 512 * ln(512.0 / (512 - present))
+                  ELSE (0.7213 / (1 + 1.079/512)) * 512 * 512
+                         / (sp + (512 - present)) END AS e
+           FROM agg),
+         x AS (SELECT what, count(DISTINCT k) AS exact_distinct
+               FROM keyed GROUP BY what)
+         SELECT est.what, 512::BIGINT AS m, v_zero::BIGINT AS v_zero,
+           round(sum_inv, 6) AS sum_inv, round(e, 2) AS est_hll,
+           exact_distinct::BIGINT AS exact_distinct,
+           round(abs(e - exact_distinct) / exact_distinct * 100, 2)
+             AS err_pct
+         FROM est JOIN x USING (what) ORDER BY what"""),
 
     // JL random projection 64d -> 16d with a deterministic md5-derived
     // matrix — the pre-ANN dimensionality squeeze (oracled bit-for-bit:
     // DuckDB rebuilds the same matrix from the same salt). Result is
-    // exploded to one scalar row per (vec_id, j) — the driver compare
+    // exploded to one scalar row per (vec_id, j) — the oracle compare
     // hashes pandas cells, and array cells are unhashable there.
     // posexplode_OUTER on purpose: a null/empty embedding must still
     // surface as a (vec_id, null, null) row, mirroring the oracle's
     // CROSS JOIN (which emits NULL-valued rows for a NULL vector) —
     // plain posexplode would silently drop the document instead.
-    "sim_project" -> ((s, dir) => {
+    Entry("sim_project", (s, dir) => {
       Similarity.randomProject(embs(s, dir), "embedding", outDim = 16)
         .select(col("vec_id"),
           posexplode_outer(col("projection")).as(Seq("j", "v")))
         .select(col("vec_id"), col("j").cast("long").as("j"),
           TextAnalysis.round4(col("v")).as("value"))
         .orderBy("vec_id", "j")
-    }),
+    }, oracle =
+      """WITH pl AS (
+           SELECT jd.j AS j, list(jd.pv ORDER BY jd.d) AS plane
+           FROM (
+             SELECT j.j, d.d,
+               ((('0x' || substr(md5('rp:0:' || j.j::VARCHAR || ':'
+                   || d.d::VARCHAR),1,8))::BIGINT
+                 % 1000001 - 500000) / 500000.0) AS pv
+             FROM unnest(range(0,16)) AS j(j)
+             CROSS JOIN unnest(range(0,64)) AS d(d)) jd
+           GROUP BY jd.j),
+         emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+         proj AS (
+           SELECT emb.vec_id, pl.j,
+             floor(list_dot_product(emb.e, pl.plane) * 0.25 * 10000 + 0.5)
+               / 10000 AS pv
+           FROM emb CROSS JOIN pl
+           WHERE emb.e IS NOT NULL)
+         SELECT vec_id, j::BIGINT AS j, pv AS value FROM proj
+         UNION ALL
+         -- posexplode_outer mirror: a NULL embedding is ONE
+         -- (vec_id, NULL, NULL) row, not 16 NULL-valued ones
+         SELECT vec_id, NULL::BIGINT AS j, NULL::DOUBLE AS value
+         FROM emb WHERE e IS NULL
+         ORDER BY vec_id, j"""),
 
     // token counting (oracled)
-    "txt_tokens" -> ((s, dir) => {
+    Entry("txt_tokens", (s, dir) => {
       docs(s, dir).select(col("doc_id"),
           length(col("text")).cast("long").as("n_chars"),
           TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"),
           TextAnalysis.tokenEstimate(col("text")).cast("long")
             .as("token_estimate"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id, length(text)::BIGINT AS n_chars,
+           len(string_split_regex(trim(text), '\s+'))::BIGINT AS n_tokens,
+           greatest(
+             len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')),
+             ceil(length(text) / 4)::INT)::BIGINT AS token_estimate
+         FROM documents ORDER BY doc_id"""),
 
     // quality metrics + score (oracled)
-    "txt_quality" -> ((s, dir) => {
+    Entry("txt_quality", (s, dir) => {
       docs(s, dir).select(col("doc_id"),
           TextAnalysis.qualityMetrics(col("text")).as("m"),
           TextAnalysis.qualityScore(col("text")).as("quality"))
@@ -888,40 +1464,127 @@ object Pipeline {
           col("m.alpha_ratio").as("alpha_ratio"),
           col("quality"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      s"""WITH $QualityBaseCtes
+         SELECT doc_id, n_tokens, mean_token_len, stopword_ratio, alpha_ratio,
+           $QualityExprSql AS quality
+         FROM base ORDER BY doc_id"""),
 
     // corpus-relative quality: mean add-k-smoothed bigram
     // log-probability per doc (the CCNet-style LM filter), self-trained
     // on the documents table; <2-token docs carry a NULL score (oracled)
-    "txt_lm_score" -> ((s, dir) => {
+    Entry("txt_lm_score", (s, dir) => {
       LanguageModel.selfScore(docs(s, dir), "doc_id", "text", k = 0.5)
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH tok AS (
+           SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk
+           FROM documents),
+         bg AS (
+           SELECT doc_id, tk[i.i + 1] AS w1, tk[i.i + 2] AS w2
+           FROM tok
+           CROSS JOIN unnest(range(0, greatest(len(tk) - 1, 0))) AS i(i)
+           WHERE len(tk) >= 2),
+         bc AS (SELECT w1, w2, count(*)::DOUBLE AS c
+                FROM bg GROUP BY 1, 2),
+         cc AS (SELECT w1, count(*)::DOUBLE AS c_ctx FROM bg GROUP BY 1),
+         v AS (SELECT count(DISTINCT u.w)::DOUBLE AS v
+               FROM (SELECT unnest(tk) AS w FROM tok) u),
+         sc AS (
+           SELECT bg.doc_id, count(*)::BIGINT AS n_bigrams,
+             avg(ln((coalesce(bc.c, 0) + 0.5)
+               / (coalesce(cc.c_ctx, 0) + 0.5 * v.v))) AS raw
+           FROM bg
+           LEFT JOIN bc USING (w1, w2)
+           LEFT JOIN cc USING (w1)
+           CROSS JOIN v
+           GROUP BY bg.doc_id)
+         SELECT d.doc_id, coalesce(sc.n_bigrams, 0)::BIGINT AS n_bigrams,
+           floor(sc.raw * 10000 + 0.5) / 10000 AS lm_score
+         FROM documents d LEFT JOIN sc USING (doc_id)
+         ORDER BY d.doc_id"""),
 
     // corpus drift: smoothed unigram KL / Jensen-Shannon divergence
     // between the first and second half of the corpus (by doc_id) —
     // the batch-vs-reference distribution monitor (oracled)
-    "txt_divergence" -> ((s, dir) => {
+    Entry("txt_divergence", (s, dir) => {
       val d = docs(s, dir)
       val cut = (d.agg(max(col("doc_id"))).head().getLong(0) + 1) / 2
       LanguageModel.unigramDivergence(
         d.filter(col("doc_id") < cut), d.filter(col("doc_id") >= cut),
         "text")
-    }),
+    }, oracle =
+      """WITH cut AS (SELECT (max(doc_id) + 1) // 2 AS c FROM documents),
+         tp AS (SELECT unnest(string_split_regex(trim(text), '\s+')) AS w
+                FROM documents, cut WHERE doc_id < cut.c),
+         tq AS (SELECT unnest(string_split_regex(trim(text), '\s+')) AS w
+                FROM documents, cut WHERE doc_id >= cut.c),
+         cp AS (SELECT w, count(*) AS c_p FROM tp GROUP BY 1),
+         cq AS (SELECT w, count(*) AS c_q FROM tq GROUP BY 1),
+         j AS (SELECT coalesce(cp.w, cq.w) AS w,
+                 coalesce(c_p, 0) AS c_p, coalesce(c_q, 0) AS c_q
+               FROM cp FULL OUTER JOIN cq ON cp.w = cq.w),
+         t AS (SELECT sum(c_p)::DOUBLE AS n_p, sum(c_q)::DOUBLE AS n_q,
+                 count(*)::DOUBLE AS v FROM j),
+         probs AS (SELECT
+             (c_p + 0.5) / (t.n_p + 0.5 * t.v) AS pw,
+             (c_q + 0.5) / (t.n_q + 0.5 * t.v) AS qw, t.v AS v
+           FROM j CROSS JOIN t)
+         SELECT max(v)::BIGINT AS vocab,
+           floor(sum(pw * ln(pw / qw)) * 10000 + 0.5) / 10000 AS kl_pq,
+           floor(sum(qw * ln(qw / pw)) * 10000 + 0.5) / 10000 AS kl_qp,
+           floor(sum(pw * ln(pw / ((pw + qw) / 2))
+             + qw * ln(qw / ((pw + qw) / 2))) / 2 * 10000 + 0.5) / 10000
+             AS js
+         FROM probs"""),
 
     // language id vs the labeled lang column (oracled)
-    "txt_langid" -> ((s, dir) => {
+    Entry("txt_langid", (s, dir) => {
       docs(s, dir).select(col("doc_id"), col("lang"),
           TextAnalysis.langId(col("text")).as("lang_pred"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH t AS (
+           SELECT doc_id, lang,
+             string_split_regex(trim(lower(text)), '\s+') AS toks
+           FROM documents),
+         s AS (
+           SELECT doc_id, lang,
+             len(list_filter(toks, x -> list_contains(
+               ['der','die','das','und','ist','nicht','mit','ein'], x)))::DOUBLE
+               / greatest(len(toks), 1) AS s_de,
+             len(list_filter(toks, x -> list_contains(
+               ['the','and','of','to','in','is','that','with'], x)))::DOUBLE
+               / greatest(len(toks), 1) AS s_en,
+             len(list_filter(toks, x -> list_contains(
+               ['el','la','los','y','es','no','con','una'], x)))::DOUBLE
+               / greatest(len(toks), 1) AS s_es,
+             len(list_filter(toks, x -> list_contains(
+               ['le','la','les','et','est','pas','avec','une'], x)))::DOUBLE
+               / greatest(len(toks), 1) AS s_fr,
+             len(list_filter(toks, x -> list_contains(
+               ['的','是','不','了','在','和','有','我'], x)))::DOUBLE
+               / greatest(len(toks), 1) AS s_zh
+           FROM t)
+         SELECT doc_id, lang,
+           CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
+                WHEN s_de >= greatest(s_en, s_es, s_fr, s_zh) THEN 'de'
+                WHEN s_en >= greatest(s_es, s_fr, s_zh) THEN 'en'
+                WHEN s_es >= greatest(s_fr, s_zh) THEN 'es'
+                WHEN s_fr >= s_zh THEN 'fr'
+                ELSE 'zh' END AS lang_pred
+         FROM s ORDER BY doc_id"""),
 
     // content fingerprint, order-insensitive (oracled via md5)
-    "txt_fingerprint" -> ((s, dir) => {
+    Entry("txt_fingerprint", (s, dir) => {
       docs(s, dir).select(col("doc_id"),
           TextAnalysis.fingerprint(col("text")).as("fingerprint"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id,
+           md5(array_to_string(list_sort(list_distinct(
+             string_split_regex(trim(text), '\s+'))), ' ')) AS fingerprint
+         FROM documents ORDER BY doc_id"""),
 
     // streaming HLL batch collapse (r16): distinctUsersPerWindow — the
     // per-window approximate-distinct counter with O(m)-bytes state —
@@ -930,7 +1593,7 @@ object Pipeline {
     // to the Sketches SQL family (spec-pinned), so DuckDB replays the
     // register table per window and the row hashes must match; exact
     // per-window distincts ride along for the error column.
-    "ev_distinct" -> ((s, dir) => {
+    Entry("ev_distinct", (s, dir) => {
       val e = Tables.load(s, dir, "events")
       val est = graft.streaming.EventsStreaming
         .distinctUsersPerWindow(e, windowLen = "1 hour", m = 512)
@@ -944,11 +1607,46 @@ object Pipeline {
           round(abs(col("est_users") - col("exact_users")) /
             col("exact_users") * 100, 2).as("err_pct"))
         .orderBy("h")
-    }),
+    }, oracle =
+      """WITH keyed AS (
+           SELECT CAST(date_trunc('hour', ts) AS varchar) AS h,
+             user_id::VARCHAR AS k
+           FROM events),
+         hsh AS (
+           SELECT h,
+             ('0x' || substr(md5('hl:r:' || k),1,8))::BIGINT % 512
+               AS register,
+             ('0x' || substr(md5('hl:w:' || k),1,8))::BIGINT AS w
+           FROM keyed),
+         r AS (
+           SELECT h, register,
+             max(CASE WHEN w = 0 THEN 33
+                      ELSE 33 - length(bin(w)) END) AS maxrho
+           FROM hsh GROUP BY h, register),
+         agg AS (
+           SELECT h, count(*) AS present,
+             coalesce(sum(1.0 / (1::BIGINT << maxrho)), 0.0) AS sp
+           FROM r GROUP BY h),
+         est AS (
+           SELECT h,
+             round(CASE WHEN (0.7213 / (1 + 1.079/512)) * 512 * 512
+                          / (sp + (512 - present)) <= 2.5 * 512
+                        AND present < 512
+                   THEN 512 * ln(512.0 / (512 - present))
+                   ELSE (0.7213 / (1 + 1.079/512)) * 512 * 512
+                          / (sp + (512 - present)) END, 2) AS est_users
+           FROM agg),
+         x AS (SELECT CAST(date_trunc('hour', ts) AS varchar) AS h,
+                 count(DISTINCT user_id) AS exact_users
+               FROM events GROUP BY 1)
+         SELECT est.h, est_users, exact_users::BIGINT AS exact_users,
+           round(abs(est_users - exact_users) / exact_users * 100, 2)
+             AS err_pct
+         FROM est JOIN x USING (h) ORDER BY h"""),
 
     // batch sessionization: 30-min-gap sessions via lag + running sum —
     // the batch twin of streaming.EventsStreaming.sessionize (oracled)
-    "ev_sessionize" -> ((s, dir) => {
+    Entry("ev_sessionize", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val e = Tables.load(s, dir, "events")
         .select(col("user_id"), col("event_id"), col("value"),
@@ -964,12 +1662,31 @@ object Pipeline {
       sess.groupBy("user_id", "session_id")
         .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("total"))
         .orderBy("user_id", "session_id")
-    }),
+    }, oracle =
+      """WITH e AS (
+           SELECT user_id, event_id, value, epoch_ns(ts) // 1000 AS us
+           FROM events),
+         g AS (
+           SELECT user_id, event_id, value, us,
+             CASE WHEN us - lag(us) OVER w IS NULL
+                    OR us - lag(us) OVER w > 1800000000 THEN 1 ELSE 0 END
+               AS new_sess
+           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
+         s AS (
+           SELECT user_id, event_id, value,
+             sum(new_sess) OVER (PARTITION BY user_id ORDER BY us, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               AS session_id
+           FROM g)
+         SELECT user_id, session_id::BIGINT AS session_id,
+           count(*) AS n_events, round(sum(value), 2) AS total
+         FROM s GROUP BY user_id, s.session_id
+         ORDER BY user_id, session_id"""),
 
     // as-of join: each purchase event picks up the user's most recent
     // view value at-or-before it (union+window implementation, oracled
     // against DuckDB's native ASOF JOIN)
-    "ev_asof" -> ((s, dir) => {
+    Entry("ev_asof", (s, dir) => {
       val e = Tables.load(s, dir, "events")
         .select(col("user_id"), col("event_id"), col("event_type"),
           col("value"), unix_micros(col("ts")).as("us"))
@@ -981,11 +1698,22 @@ object Pipeline {
       graft.operators.AsOfJoin.asofBackward(purchases, views,
           Seq("user_id"), "us", Seq("view_value"))
         .orderBy("event_id")
-    }),
+    }, oracle =
+      """WITH e AS (SELECT event_id, user_id, event_type, value,
+             epoch_ns(ts) // 1000 AS us
+           FROM events),
+         p AS (SELECT user_id, event_id, us FROM e
+               WHERE event_type = 'purchase'),
+         v AS (SELECT user_id, us, max(value) AS view_value FROM e
+               WHERE event_type = 'view' GROUP BY 1, 2)
+         SELECT p.user_id, p.event_id, p.us, v.view_value AS asof_view_value
+         FROM p ASOF LEFT JOIN v
+           ON p.user_id = v.user_id AND p.us >= v.us
+         ORDER BY p.event_id"""),
 
     // forward as-of: each purchase picks up the user's NEXT view value
     // at-or-after it (oracled against DuckDB ASOF with <=)
-    "ev_asof_fwd" -> ((s, dir) => {
+    Entry("ev_asof_fwd", (s, dir) => {
       val e = Tables.load(s, dir, "events")
         .select(col("user_id"), col("event_id"), col("event_type"),
           col("value"), unix_micros(col("ts")).as("us"))
@@ -996,13 +1724,24 @@ object Pipeline {
       graft.operators.AsOfJoin.asof(purchases, views,
           Seq("user_id"), "us", Seq("view_value"), direction = "forward")
         .orderBy("event_id")
-    }),
+    }, oracle =
+      """WITH e AS (SELECT event_id, user_id, event_type, value,
+             epoch_ns(ts) // 1000 AS us
+           FROM events),
+         p AS (SELECT user_id, event_id, us FROM e
+               WHERE event_type = 'purchase'),
+         v AS (SELECT user_id, us, max(value) AS view_value FROM e
+               WHERE event_type = 'view' GROUP BY 1, 2)
+         SELECT p.user_id, p.event_id, p.us, v.view_value AS asof_view_value
+         FROM p ASOF LEFT JOIN v
+           ON p.user_id = v.user_id AND p.us <= v.us
+         ORDER BY p.event_id"""),
 
     // nearest as-of with a 1-hour tolerance: closest view either side,
     // ties to backward, matches farther than an hour dropped (oracled by
     // combining DuckDB's backward + forward ASOF joins with the same
     // arbitration)
-    "ev_asof_near" -> ((s, dir) => {
+    Entry("ev_asof_near", (s, dir) => {
       val e = Tables.load(s, dir, "events")
         .select(col("user_id"), col("event_id"), col("event_type"),
           col("value"), unix_micros(col("ts")).as("us"))
@@ -1014,7 +1753,38 @@ object Pipeline {
           Seq("user_id"), "us", Seq("view_value"), direction = "nearest",
           tolerance = Some(3600L * 1000000L))
         .orderBy("event_id")
-    }),
+    }, oracle =
+      """WITH e AS (SELECT event_id, user_id, event_type, value,
+             epoch_ns(ts) // 1000 AS us
+           FROM events),
+         p AS (SELECT user_id, event_id, us FROM e
+               WHERE event_type = 'purchase'),
+         v AS (SELECT user_id, us, max(value) AS view_value FROM e
+               WHERE event_type = 'view' GROUP BY 1, 2),
+         b AS (SELECT p.event_id, v.us AS rts, v.view_value AS bv
+               FROM p ASOF LEFT JOIN v
+                 ON p.user_id = v.user_id AND p.us >= v.us),
+         f AS (SELECT p.event_id, v.us AS rts, v.view_value AS fv
+               FROM p ASOF LEFT JOIN v
+                 ON p.user_id = v.user_id AND p.us <= v.us)
+         SELECT p.user_id, p.event_id, p.us,
+           CASE WHEN m.rts IS NOT NULL AND abs(p.us - m.rts) <= 3600000000
+                THEN m.mv END AS asof_view_value
+         FROM p
+         LEFT JOIN (
+           SELECT b.event_id,
+             CASE WHEN f.rts IS NULL THEN b.rts
+                  WHEN b.rts IS NOT NULL
+                       AND (p2.us - b.rts) <= (f.rts - p2.us) THEN b.rts
+                  ELSE f.rts END AS rts,
+             CASE WHEN f.rts IS NULL THEN b.bv
+                  WHEN b.rts IS NOT NULL
+                       AND (p2.us - b.rts) <= (f.rts - p2.us) THEN b.bv
+                  ELSE f.fv END AS mv
+           FROM b JOIN f ON b.event_id = f.event_id
+           JOIN p p2 ON p2.event_id = b.event_id) m
+           ON m.event_id = p.event_id
+         ORDER BY p.event_id"""),
 
     // purchase attribution as the bounded batch query the watermarked
     // stream-stream join collapses to: each purchase joins the same
@@ -1025,18 +1795,31 @@ object Pipeline {
     // (Catalyst's EliminateEventTimeWatermark), so the oracle certifies
     // the exact join the stream executes, minus only the state-expiry
     // mechanics the watermark adds (oracled)
-    "ev_attrib" -> ((s, dir) => {
+    Entry("ev_attrib", (s, dir) => {
       val e = Tables.load(s, dir, "events")
       graft.streaming.EventsStreaming.purchaseAttribution(e)
         .select(col("purchase_id"), col("user_id"),
           unix_micros(col("p_ts")).as("p_us"), col("purchase_value"),
           col("view_id"), unix_micros(col("v_ts")).as("v_us"))
         .orderBy("purchase_id", "view_id")
-    }),
+    }, oracle =
+      """WITH e AS (SELECT event_id, user_id, event_type, value,
+             epoch_ns(ts) // 1000 AS us
+           FROM events),
+         p AS (SELECT event_id AS purchase_id, user_id, us AS p_us,
+               value AS purchase_value FROM e
+               WHERE event_type = 'purchase'),
+         v AS (SELECT event_id AS view_id, user_id AS v_user_id, us AS v_us
+               FROM e WHERE event_type = 'view')
+         SELECT p.purchase_id, p.user_id, p.p_us, p.purchase_value,
+           v.view_id, v.v_us
+         FROM p JOIN v ON p.user_id = v.v_user_id
+           AND v.v_us <= p.p_us AND v.v_us >= p.p_us - 3600000000
+         ORDER BY purchase_id, view_id"""),
 
     // bucketed range join: which orders' first-week windows contain each
     // lineitem ship date (oracled against a plain BETWEEN join)
-    "q_range_join" -> ((s, dir) => {
+    Entry("q_range_join", (s, dir) => {
       val pts = Tables.load(s, dir, "lineitem")
         .filter(col("l_orderkey") < 200)
         .select(col("l_orderkey"), col("l_linenumber"),
@@ -1052,30 +1835,54 @@ object Pipeline {
           "ship_day", "lo", "hi", bucketWidth = 7)
         .select("l_orderkey", "l_linenumber", "ship_day", "o_orderkey")
         .orderBy("l_orderkey", "l_linenumber", "ship_day", "o_orderkey")
-    }),
+    }, oracle =
+      """WITH pts AS (
+           SELECT l_orderkey, l_linenumber,
+             date_diff('day', DATE '1970-01-01', l_shipdate::DATE)::BIGINT
+               AS ship_day
+           FROM lineitem WHERE l_orderkey < 200),
+         ivs AS (
+           SELECT o_orderkey,
+             date_diff('day', DATE '1970-01-01', o_orderdate::DATE)::BIGINT
+               AS lo
+           FROM orders WHERE o_orderkey < 2000)
+         SELECT l_orderkey, l_linenumber, ship_day, o_orderkey
+         FROM pts JOIN ivs
+           ON ship_day BETWEEN lo AND lo + 7
+         ORDER BY l_orderkey, l_linenumber, ship_day, o_orderkey"""),
 
     // canonical text normalization (oracled)
-    "txt_normalize" -> ((s, dir) => {
+    Entry("txt_normalize", (s, dir) => {
       docs(s, dir).select(col("doc_id"),
           TextAnalysis.normalize(col("text")).as("norm"),
           length(TextAnalysis.normalize(col("text"))).cast("long")
             .as("norm_len"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id,
+           trim(regexp_replace(regexp_replace(lower(text),
+             '[.,;:!?''"()\[\]{}-]', '', 'g'), '\s+', ' ', 'g')) AS norm,
+           length(trim(regexp_replace(regexp_replace(lower(text),
+             '[.,;:!?''"()\[\]{}-]', '', 'g'), '\s+', ' ', 'g')))::BIGINT
+             AS norm_len
+         FROM documents ORDER BY doc_id"""),
 
     // LSH-probed ANN (md5-derived planes -> fully oracled; the exact
     // counterpart is sim_topk). bits is DERIVED from the corpus size
     // (autoBits: 4 at n=500, 6 at n=2000) so candidates/query stay
     // ~tables x targetBucket at any sf — the oracle derives the same
     // bits from count(*), so the check is sf-agnostic.
-    "sim_topk_lsh" -> ((s, dir) => {
+    Entry("sim_topk_lsh", (s, dir) => {
       val e = embs(s, dir)
       Similarity.lshTopK(corpusPar(e), e, "vec_id", "embedding", k = 5,
           tables = 8, mode = HashMode.Md5)
         .select(col("query_id"), col("neighbor_id"),
           round(col("cosine"), 4).as("cosine"))
         .orderBy("query_id", "neighbor_id")
-    }),
+    }, oracle =
+      s"""WITH ${lshTopKCtes(tables = 8, targetBucket = 32, k = 5)}
+         SELECT query_id, neighbor_id, round(cos, 4) AS cosine
+         FROM lsh_ranked WHERE rn <= 5 ORDER BY query_id, neighbor_id"""),
 
     // LSH recall measurement: fraction of the exact top-5 the LSH probe
     // recovers, per query — the evidence behind "recall tunable via
@@ -1087,12 +1894,12 @@ object Pipeline {
     // per pick), and the oracle replays it with an unrolled CTE chain —
     // every cosine and MMR score floor-rounded to 4dp before each
     // argmax, the kmeans-trajectory exactness pattern (oracled)
-    "sim_mmr" -> ((s, dir) => {
+    Entry("sim_mmr", (s, dir) => {
       val e = embs(s, dir)
       Similarity.mmrTopK(corpusPar(e), e.filter(col("vec_id") < 8),
           "vec_id", "embedding", k = 4, topN = 12, lambda = 0.7)
         .orderBy("query_id", "step")
-    }),
+    }, oracle = mmrOracleSql(k = 4, topN = 12, lambda = 0.7)),
 
     // the k=8 twin keeps the LONG greedy trajectory under the
     // cross-engine gate (r12: mmrTopK checkpoints after every step at
@@ -1100,16 +1907,17 @@ object Pipeline {
     // walks 4 more greedy stages): a truncation that changed values —
     // not just plans — would turn this row red;
     // 8 unrolled oracle stages replay the longer trajectory exactly
-    "sim_mmr8" -> ((s, dir) => {
+    Entry("sim_mmr8", (s, dir) => {
       val e = embs(s, dir)
       Similarity.mmrTopK(corpusPar(e), e.filter(col("vec_id") < 4),
           "vec_id", "embedding", k = 8, topN = 12, lambda = 0.7)
         .orderBy("query_id", "step")
-    }),
+    }, oracle = mmrOracleSql(k = 8, topN = 12, lambda = 0.7,
+      nQueries = 4)),
 
     // query — per-query rows would make the artifact needlessly wide;
     // the banded means still localize a recall regression
-    "sim_recall" -> ((s, dir) => {
+    Entry("sim_recall", (s, dir) => {
       val e = embs(s, dir)
       val ep = corpusPar(e)
       val brute = Similarity.bruteForceTopK(ep, e, "vec_id", "embedding", k = 5)
@@ -1124,24 +1932,45 @@ object Pipeline {
         .withColumn("recall",
           round(col("n_hit").cast("double") / col("k"), 4))
         .orderBy("band")
-    }),
+    }, oracle =
+      s"""WITH ${lshTopKCtes(tables = 8, targetBucket = 32, k = 5)},
+         lsh AS (SELECT query_id, neighbor_id FROM lsh_ranked WHERE rn <= 5),
+         b_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                        list_cosine_similarity(q.e, c.e) AS cos
+                      FROM emb q JOIN emb c ON c.vec_id != q.vec_id),
+         b_ranked AS (SELECT query_id, neighbor_id,
+                        row_number() OVER (PARTITION BY query_id
+                          ORDER BY cos DESC, neighbor_id ASC) AS rn
+                      FROM b_scored),
+         brute AS (SELECT query_id, neighbor_id FROM b_ranked WHERE rn <= 5)
+         SELECT b.query_id % 32 AS band, count(*) AS k,
+           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
+             AS n_hit,
+           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
+             END)::DOUBLE / count(*), 4) AS recall
+         FROM brute b LEFT JOIN lsh l
+           ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
+         GROUP BY b.query_id % 32 ORDER BY band"""),
 
     // IVF ANN: label-centroid coarse quantizer (rounded 6dp so both
     // engines quantize identically), probe 3 of 10 inverted lists, exact
     // cosine re-rank (oracled)
-    "sim_topk_ivf" -> ((s, dir) => {
+    Entry("sim_topk_ivf", (s, dir) => {
       val e = embs(s, dir)
       Similarity.ivfTopK(e, e.filter(col("vec_id") < 8), "vec_id",
           "embedding", ivfCentroids(e), k = 5, nProbe = 3)
         .select(col("query_id"), col("neighbor_id"),
           round(col("cosine"), 4).as("cosine"))
         .orderBy("query_id", "neighbor_id")
-    }),
+    }, oracle =
+      s"""WITH ${ivfCtes(nProbe = 3)}
+         SELECT query_id, neighbor_id, round(cos, 4) AS cosine
+         FROM ivf_ranked WHERE rn <= 5 ORDER BY query_id, neighbor_id"""),
 
     // deterministic k-means (lowest-id init, 6dp-rounded trajectories):
     // centroids + member counts after 2 iterations, value-verified
     // against a DuckDB unrolling of the same iterations
-    "sim_kmeans" -> ((s, dir) => {
+    Entry("sim_kmeans", (s, dir) => {
       val e = embs(s, dir)
       val cents = Similarity.kmeans(e, "vec_id", "embedding", k = 4,
         iters = 2)
@@ -1153,7 +1982,7 @@ object Pipeline {
           round(element_at(col("centroid"), 2), 6).as("c2"),
           coalesce(col("n_members"), lit(0L)).as("n_members"))
         .orderBy("cid")
-    }),
+    }, oracle = kmeansOracleSql(k = 4, iters = 2)),
 
     // sampled coarse-quantizer training (r14): the kmeans iterations
     // run over a 32-vector md5-rank sample, then ONE full-corpus
@@ -1162,7 +1991,7 @@ object Pipeline {
     // Oracled exactly like sim_kmeans: DuckDB draws the same sample
     // (md5 strings sort identically), walks the same 6dp trajectory,
     // and assigns the full corpus at the end
-    "sim_kmeans_sampled" -> ((s, dir) => {
+    Entry("sim_kmeans_sampled", (s, dir) => {
       val e = embs(s, dir)
       val cents = Similarity.kmeansSampled(e, "vec_id", "embedding",
         k = 4, sampleN = 32, iters = 2)
@@ -1174,10 +2003,11 @@ object Pipeline {
           round(element_at(col("centroid"), 2), 6).as("c2"),
           coalesce(col("n_members"), lit(0L)).as("n_members"))
         .orderBy("cid")
-    }),
+    }, oracle = kmeansOracleSql(k = 4, iters = 2,
+      sampleN = Some(32))),
 
     // IVF recall vs the exact top-5 (the probes/k tradeoff, measured)
-    "sim_recall_ivf" -> ((s, dir) => {
+    Entry("sim_recall_ivf", (s, dir) => {
       val e = embs(s, dir)
       val q = e.filter(col("vec_id") < 8)
       val brute = Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 5)
@@ -1192,7 +2022,26 @@ object Pipeline {
         .withColumn("recall",
           round(col("n_hit").cast("double") / col("k"), 4))
         .orderBy("query_id")
-    }),
+    }, oracle =
+      s"""WITH ${ivfCtes(nProbe = 3)},
+         ivf AS (SELECT query_id, neighbor_id FROM ivf_ranked WHERE rn <= 5),
+         b_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                        list_cosine_similarity(q.e, c.e) AS cos
+                      FROM emb q JOIN emb c ON c.vec_id != q.vec_id
+                      WHERE q.vec_id < 8),
+         b_ranked AS (SELECT query_id, neighbor_id,
+                        row_number() OVER (PARTITION BY query_id
+                          ORDER BY cos DESC, neighbor_id ASC) AS rn
+                      FROM b_scored),
+         brute AS (SELECT query_id, neighbor_id FROM b_ranked WHERE rn <= 5)
+         SELECT b.query_id, count(*) AS k,
+           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
+             AS n_hit,
+           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
+             END)::DOUBLE / count(*), 4) AS recall
+         FROM brute b LEFT JOIN ivf l
+           ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
+         GROUP BY b.query_id ORDER BY b.query_id"""),
 
     // IVF recall sweep: the knob a 100 TB user actually turns — mean
     // recall@5 at nProbe 1 / 2 / 4 in one artifact, verifying the
@@ -1200,7 +2049,7 @@ object Pipeline {
     // candidates, so recall never drops; its cost grows linearly). One
     // brute pass shared across the sweep; each nProbe is one
     // broadcast-probe candidate pass (oracled).
-    "sim_recall_sweep" -> ((s, dir) => {
+    Entry("sim_recall_sweep", (s, dir) => {
       val e = embs(s, dir)
       val q = e.filter(col("vec_id") < 8)
       val brute = Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 5)
@@ -1215,7 +2064,42 @@ object Pipeline {
           .select(lit(np.toLong).as("n_probe"), col("k"), col("n_hit"),
             round(col("n_hit").cast("double") / col("k"), 4).as("recall"))
       }.reduce(_ union _).orderBy("n_probe")
-    }),
+    }, oracle =
+      s"""WITH $ivfBaseCtes,
+         sweep AS (SELECT unnest([1, 2, 4]) AS n_probe),
+         cand AS (SELECT DISTINCT s.n_probe, p.query_id,
+                    a.vec_id AS neighbor_id
+                  FROM sweep s JOIN probes_ranked p ON p.rn <= s.n_probe
+                  JOIN assign a ON a.cid = p.cid
+                  WHERE a.vec_id != p.query_id),
+         sc AS (SELECT n_probe, query_id, neighbor_id,
+                  list_cosine_similarity(eq.e, ec.e) AS cos
+                FROM cand JOIN emb eq ON eq.vec_id = cand.query_id
+                          JOIN emb ec ON ec.vec_id = cand.neighbor_id),
+         rk AS (SELECT n_probe, query_id, neighbor_id,
+                  row_number() OVER (PARTITION BY n_probe, query_id
+                    ORDER BY cos DESC, neighbor_id ASC) AS rn
+                FROM sc),
+         ivf AS (SELECT n_probe, query_id, neighbor_id FROM rk
+                 WHERE rn <= 5),
+         b_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                        list_cosine_similarity(q.e, c.e) AS cos
+                      FROM emb q JOIN emb c ON c.vec_id != q.vec_id
+                      WHERE q.vec_id < 8),
+         b_ranked AS (SELECT query_id, neighbor_id,
+                        row_number() OVER (PARTITION BY query_id
+                          ORDER BY cos DESC, neighbor_id ASC) AS rn
+                      FROM b_scored),
+         brute AS (SELECT query_id, neighbor_id FROM b_ranked WHERE rn <= 5)
+         SELECT s.n_probe::BIGINT AS n_probe, count(*)::BIGINT AS k,
+           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
+             AS n_hit,
+           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
+             END)::DOUBLE / count(*), 4) AS recall
+         FROM sweep s CROSS JOIN brute b
+         LEFT JOIN ivf l ON l.n_probe = s.n_probe
+           AND l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
+         GROUP BY s.n_probe ORDER BY n_probe"""),
 
     // the same sweep through the COMPOSED billion-scale index (r12
     // verdict #6): IVF-PQ's nProbe is the identical knob — more lists
@@ -1226,7 +2110,7 @@ object Pipeline {
     // neighbor). Both index halves are prebuilt once and shared across
     // the sweep (the production build-once / probe-per-batch shape);
     // oracled per probe level against the full DuckDB PQ replay.
-    "sim_recall_sweep_ivfpq" -> ((s, dir) => {
+    Entry("sim_recall_sweep_ivfpq", (s, dir) => {
       val e = embs(s, dir)
       val q = e.filter(col("vec_id") < 8)
       val books = pqBooks(s, dir)
@@ -1247,14 +2131,55 @@ object Pipeline {
           .select(lit(np.toLong).as("n_probe"), col("k"), col("n_hit"),
             round(col("n_hit").cast("double") / col("k"), 4).as("recall"))
       }.reduce(_ union _).orderBy("n_probe")
-    }),
+    }, oracle =
+      // the IVF-PQ sweep reuses the full-pair PQ replay (pscored — the
+      // sim_topk_pq oracle's scoring CTE, no injected cand) and slices it
+      // per probe level: candidates from probes_ranked at rn <= n_probe,
+      // then the floor-4dp ADC rank WITHIN each (n_probe, query) slice —
+      // exactly ivfPqTopK's restrict-then-rank order
+      s"""WITH $ivfBaseCtes,
+         ${pqCtes(PqM, PqKsub, PqIters, emitEmb = false)},
+         sweep AS (SELECT unnest([1, 2, 4]) AS n_probe),
+         pcand AS (SELECT DISTINCT s.n_probe, p.query_id,
+                     a.vec_id AS neighbor_id
+                   FROM sweep s JOIN probes_ranked p ON p.rn <= s.n_probe
+                   JOIN assign a ON a.cid = p.cid
+                   WHERE a.vec_id != p.query_id),
+         psel AS (SELECT c.n_probe, sc.query_id, sc.neighbor_id, sc.cosine
+                  FROM pcand c JOIN pscored sc
+                    ON sc.query_id = c.query_id
+                    AND sc.neighbor_id = c.neighbor_id),
+         prk AS (SELECT n_probe, query_id, neighbor_id,
+                   row_number() OVER (PARTITION BY n_probe, query_id
+                     ORDER BY cosine DESC, neighbor_id ASC) AS rn
+                 FROM psel),
+         ipq AS (SELECT n_probe, query_id, neighbor_id FROM prk
+                 WHERE rn <= 5),
+         b_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                        list_cosine_similarity(q.e, c.e) AS cos
+                      FROM emb q JOIN emb c ON c.vec_id != q.vec_id
+                      WHERE q.vec_id < 8),
+         b_ranked AS (SELECT query_id, neighbor_id,
+                        row_number() OVER (PARTITION BY query_id
+                          ORDER BY cos DESC, neighbor_id ASC) AS rn
+                      FROM b_scored),
+         brute AS (SELECT query_id, neighbor_id FROM b_ranked WHERE rn <= 5)
+         SELECT s.n_probe::BIGINT AS n_probe, count(*)::BIGINT AS k,
+           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
+             AS n_hit,
+           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
+             END)::DOUBLE / count(*), 4) AS recall
+         FROM sweep s CROSS JOIN brute b
+         LEFT JOIN ipq l ON l.n_probe = s.n_probe
+           AND l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
+         GROUP BY s.n_probe ORDER BY n_probe"""),
 
     // the residual index through the same knob (completes the sweep
     // family: plain IVF, composed IVF-PQ, residual IVF-PQ): both index
     // halves prebuilt once; the residual codes carry each neighbor's
     // coarse cid, so no separate inverted-list frame is needed and the
     // probe is the codes-join itself at every level
-    "sim_recall_sweep_ivfpq_res" -> ((s, dir) => {
+    Entry("sim_recall_sweep_ivfpq_res", (s, dir) => {
       val e = embs(s, dir)
       val q = e.filter(col("vec_id") < 8)
       val cents = ivfCentroids(e)
@@ -1278,13 +2203,52 @@ object Pipeline {
           .select(lit(np.toLong).as("n_probe"), col("k"), col("n_hit"),
             round(col("n_hit").cast("double") / col("k"), 4).as("recall"))
       }.reduce(_ union _).orderBy("n_probe")
-    }),
+    }, oracle =
+      // the sweep runs the residual chain once at the MAX probe level (4
+      // — rscored is then a superset of every level's candidates, since
+      // a neighbor qualifies at level np iff its coarse cid ranks
+      // <= np for the query) and slices per level before the rank cut —
+      // ivfPqResidualTopK's restrict-then-rank order at each np
+      s"""WITH $ivfBaseCtes,
+         ${residualIvfPqCtes(PqM, PqKsub, PqIters, nProbe = 4)},
+         sweep AS (SELECT unnest([1, 2, 4]) AS n_probe),
+         rsel AS (SELECT s.n_probe, sc.query_id, sc.neighbor_id,
+                    sc.cosine
+                  FROM rscored sc
+                  JOIN remb rm ON rm.vec_id = sc.neighbor_id
+                  JOIN probes_ranked pr ON pr.query_id = sc.query_id
+                    AND pr.cid = rm.cid
+                  JOIN sweep s ON pr.rn <= s.n_probe),
+         rk2 AS (SELECT n_probe, query_id, neighbor_id,
+                   row_number() OVER (PARTITION BY n_probe, query_id
+                     ORDER BY cosine DESC, neighbor_id ASC) AS rn
+                 FROM rsel),
+         ipqres AS (SELECT n_probe, query_id, neighbor_id FROM rk2
+                    WHERE rn <= 5),
+         b_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                        list_cosine_similarity(q.e, c.e) AS cos
+                      FROM emb q JOIN emb c ON c.vec_id != q.vec_id
+                      WHERE q.vec_id < 8),
+         b_ranked AS (SELECT query_id, neighbor_id,
+                        row_number() OVER (PARTITION BY query_id
+                          ORDER BY cos DESC, neighbor_id ASC) AS rn
+                      FROM b_scored),
+         brute AS (SELECT query_id, neighbor_id FROM b_ranked WHERE rn <= 5)
+         SELECT s.n_probe::BIGINT AS n_probe, count(*)::BIGINT AS k,
+           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
+             AS n_hit,
+           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
+             END)::DOUBLE / count(*), 4) AS recall
+         FROM sweep s CROSS JOIN brute b
+         LEFT JOIN ipqres l ON l.n_probe = s.n_probe
+           AND l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
+         GROUP BY s.n_probe ORDER BY n_probe"""),
 
     // Gopher-style repetition filter: duplicate-3-gram fraction and
     // top-bigram share per doc, plus the keep verdict at thresholds that
     // split this corpus ~90/10 (oracled — both metrics are exact
     // count arithmetic)
-    "txt_repetition" -> ((s, dir) => {
+    Entry("txt_repetition", (s, dir) => {
       docs(s, dir).select(col("doc_id"),
           TextAnalysis.round4(TextAnalysis.dupNgramFrac(col("text"), 3))
             .as("dup3_frac"),
@@ -1293,25 +2257,75 @@ object Pipeline {
         .withColumn("keep",
           col("dup3_frac") <= 0.05 && col("top2_frac") <= 0.07)
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+')
+             AS tk FROM documents),
+         g3 AS (SELECT doc_id, list_filter(list_transform(
+                  range(1, greatest(len(tk)-2, 1)+1),
+                  i -> array_to_string(tk[i:i+2], ' ')),
+                  g -> len(g) > 0) AS g
+                FROM t),
+         d3 AS (SELECT doc_id, CASE WHEN len(g) = 0 THEN 0.0
+                  ELSE 1.0 - len(list_distinct(g))::DOUBLE / len(g) END
+                  AS dup3 FROM g3),
+         g2 AS (SELECT doc_id, unnest(list_filter(list_transform(
+                  range(1, greatest(len(tk)-1, 1)+1),
+                  i -> array_to_string(tk[i:i+1], ' ')),
+                  g -> len(g) > 0)) AS bg
+                FROM t),
+         bc AS (SELECT doc_id, bg, count(*) AS c FROM g2 GROUP BY 1, 2),
+         t2 AS (SELECT doc_id, max(c)::DOUBLE / sum(c) AS top2 FROM bc
+                GROUP BY 1)
+         SELECT d3.doc_id,
+           floor(dup3 * 10000 + 0.5) / 10000 AS dup3_frac,
+           floor(coalesce(top2, 0.0) * 10000 + 0.5) / 10000 AS top2_frac,
+           (floor(dup3 * 10000 + 0.5) / 10000 <= 0.05 AND
+            floor(coalesce(top2, 0.0) * 10000 + 0.5) / 10000 <= 0.07)
+             AS keep
+         FROM d3 LEFT JOIN t2 ON t2.doc_id = d3.doc_id
+         ORDER BY d3.doc_id"""),
 
     // text -> vector bridge: hashing-trick features + cosine top-3
     // text-neighbors for the first 8 docs — near-dup by CONTENT without
     // any embedding model (oracled: md5 buckets replay in DuckDB)
-    "txt_hash_topk" -> ((s, dir) => {
+    Entry("txt_hash_topk", (s, dir) => {
       val fv = TextAnalysis.hashFeatures(docs(s, dir), "doc_id", "text")
       Similarity.bruteForceTopK(fv, fv.filter(col("doc_id") < 8),
           "doc_id", "features", k = 3)
         .select(col("query_id"), col("neighbor_id"),
           round(col("cosine"), 4).as("cosine"))
         .orderBy("query_id", "neighbor_id")
-    }),
+    }, oracle =
+      """WITH tok AS (SELECT doc_id,
+             unnest(string_split_regex(trim(text), '\s+')) AS t
+           FROM documents),
+         cnt AS (SELECT doc_id,
+                   (('0x' || substr(md5('hf:' || t),1,8))::BIGINT % 64)
+                     AS b,
+                   count(*)::DOUBLE AS c
+                 FROM tok GROUP BY 1, 2),
+         ids AS (SELECT DISTINCT doc_id FROM cnt),
+         fv AS (SELECT ids.doc_id,
+                  list(coalesce(cnt.c, 0.0) ORDER BY i.i) AS v
+                FROM ids CROSS JOIN range(0, 64) i(i)
+                LEFT JOIN cnt ON cnt.doc_id = ids.doc_id AND cnt.b = i.i
+                GROUP BY ids.doc_id),
+         scored AS (SELECT q.doc_id AS query_id, c.doc_id AS neighbor_id,
+                      list_cosine_similarity(q.v, c.v) AS cos
+                    FROM fv q JOIN fv c ON c.doc_id != q.doc_id
+                    WHERE q.doc_id < 8),
+         ranked AS (SELECT query_id, neighbor_id, cos,
+                      row_number() OVER (PARTITION BY query_id
+                        ORDER BY cos DESC, neighbor_id ASC) AS rn
+                    FROM scored)
+         SELECT query_id, neighbor_id, round(cos, 4) AS cosine
+         FROM ranked WHERE rn <= 3 ORDER BY query_id, neighbor_id"""),
 
     // composite C4/Gopher-style filter report: per-doc keep/drop with
     // per-reason flags — the audit table every corpus filter job emits
     // (reasons are individually oracled via txt_quality/txt_repetition;
     // this query oracles the COMPOSITION and the final keep decision)
-    "txt_filter" -> ((s, dir) => {
+    Entry("txt_filter", (s, dir) => {
       docs(s, dir).select(col("doc_id"),
           TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"),
           TextAnalysis.qualityScore(col("text")).as("quality"),
@@ -1323,13 +2337,52 @@ object Pipeline {
         .withColumn("keep",
           !col("too_short") && !col("low_quality") && !col("too_repetitive"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH m AS (
+           SELECT doc_id, text,
+             string_split_regex(trim(text), '\s+') AS toks,
+             length(text) AS len
+           FROM documents),
+         base AS (
+           SELECT doc_id,
+             len(toks)::BIGINT AS n_tokens,
+             round(len(list_filter(toks, x -> list_contains(
+                 ['the','a','an','and','or','of','to','in','is','it','that',
+                  'for','on','with','as','at','by','this'], lower(x))))::DOUBLE /
+               greatest(len(toks), 1), 4) AS stopword_ratio,
+             round(len(regexp_extract_all(text, '[A-Za-z]'))::DOUBLE /
+               greatest(len, 1), 4) AS alpha_ratio,
+             (CASE WHEN len(toks) BETWEEN 10 AND 10000 THEN 1.0 ELSE 0.3 END)
+               AS length_ok
+           FROM m),
+         q AS (
+           SELECT doc_id, n_tokens,
+             floor((length_ok * 0.4 + least(stopword_ratio * 5.0, 1.0) * 0.3
+               + alpha_ratio * 0.3) * 10000 + 0.5) / 10000 AS quality
+           FROM base),
+         g3 AS (SELECT doc_id, list_filter(list_transform(
+                  range(1, greatest(len(toks)-2, 1)+1),
+                  i -> array_to_string(toks[i:i+2], ' ')),
+                  g -> len(g) > 0) AS g
+                FROM m),
+         d3 AS (SELECT doc_id,
+                  floor((CASE WHEN len(g) = 0 THEN 0.0
+                    ELSE 1.0 - len(list_distinct(g))::DOUBLE / len(g) END)
+                    * 10000 + 0.5) / 10000 AS dup3_frac
+                FROM g3)
+         SELECT q.doc_id, q.n_tokens, q.quality, d3.dup3_frac,
+           q.n_tokens < 20 AS too_short,
+           q.quality < 0.5 AS low_quality,
+           d3.dup3_frac > 0.05 AS too_repetitive,
+           NOT (q.n_tokens < 20 OR q.quality < 0.5 OR d3.dup3_frac > 0.05)
+             AS keep
+         FROM q JOIN d3 USING (doc_id) ORDER BY q.doc_id"""),
 
     // PII redaction audit: deterministic synthetic PII (email/phone/IP
     // built from doc columns — the corpus itself is PII-free) is injected,
     // redacted, and counted; the oracle rebuilds the same doctored text
     // and applies the same RE2-safe patterns (oracled)
-    "txt_redact" -> ((s, dir) => {
+    Entry("txt_redact", (s, dir) => {
       val doctored = concat(col("text"),
         lit(" contact user"), col("doc_id").cast("string"),
         lit("@mail.example.org"),
@@ -1343,45 +2396,112 @@ object Pipeline {
             TextAnalysis.redactPii(doctored).as("redacted")) ++
           counts.map { case (n, c) => c.cast("long").as(n) }: _*)
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH d AS (
+           SELECT doc_id,
+             text || ' contact user' || doc_id::VARCHAR
+                  || '@mail.example.org'
+                  || ' or 555-867-' || lpad((doc_id % 10000)::VARCHAR, 4, '0')
+                  || ' from 10.0.' || (doc_id % 256)::VARCHAR
+                  || '.' || (doc_id % 100)::VARCHAR AS t
+           FROM documents),
+         s1 AS (SELECT doc_id, t,
+             regexp_replace(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
+               '<EMAIL>', 'g') AS t1 FROM d),
+         s2 AS (SELECT doc_id, t, t1,
+             regexp_replace(t1, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b',
+               '<IP>', 'g') AS t2 FROM s1)
+         SELECT doc_id,
+           regexp_replace(t2, '\b\d{3}[-. ]\d{3}[-. ]\d{4}\b', '<PHONE>', 'g')
+             AS redacted,
+           len(regexp_extract_all(t,
+             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))::BIGINT
+             AS n_email,
+           len(regexp_extract_all(t1,
+             '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b'))::BIGINT AS n_ip,
+           len(regexp_extract_all(t2,
+             '\b\d{3}[-. ]\d{3}[-. ]\d{4}\b'))::BIGINT AS n_phone
+         FROM s2 ORDER BY doc_id"""),
 
     // BM25 full-text search: top-10 docs for a 3-term query over the
     // inverted index — retrieval for decontamination lookups / corpus
     // slicing (oracled: same idf/tf math, floor-rounded before the cut)
-    "txt_bm25" -> ((s, dir) => {
+    Entry("txt_bm25", (s, dir) => {
       Search.bm25TopK(docs(s, dir), "doc_id", "text",
           terms = Seq("spark", "join", "shuffle"), k = 10)
         .select(col("doc").as("doc_id"), col("n_terms_hit"), col("score"))
         .orderBy(col("score").desc, col("doc_id"))
-    }),
+    }, oracle =
+      """WITH dl AS (
+           SELECT doc_id AS doc,
+             len(string_split_regex(trim(text), '\s+'))::DOUBLE AS dl
+           FROM documents),
+         stats AS (
+           SELECT count(*)::DOUBLE AS n_docs, avg(dl) AS avgdl FROM dl),
+         post AS (
+           SELECT term, doc, count(*)::DOUBLE AS tf FROM (
+             SELECT doc_id AS doc,
+               unnest(string_split_regex(trim(text), '\s+')) AS term
+             FROM documents)
+           WHERE term IN ('spark', 'join', 'shuffle')
+           GROUP BY term, doc),
+         dfreq AS (
+           SELECT term, count(DISTINCT doc)::DOUBLE AS df
+           FROM post GROUP BY term),
+         scored AS (
+           SELECT p.doc, count(*)::BIGINT AS n_terms_hit,
+             sum(ln(1 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
+                 * p.tf * 2.2
+                 / (p.tf + 1.2 * (0.25 + 0.75 * d.dl / s.avgdl))) AS score
+           FROM post p
+           JOIN dfreq f USING (term)
+           JOIN dl d USING (doc)
+           CROSS JOIN stats s
+           GROUP BY p.doc)
+         SELECT doc AS doc_id, n_terms_hit,
+           floor(score * 10000 + 0.5) / 10000 AS score
+         FROM scored ORDER BY score DESC, doc_id LIMIT 10"""),
 
     // corpus length histogram: fixed-width buckets over n_chars — the
     // first chart anyone draws over a new corpus (oracled)
-    "txt_length_hist" -> ((s, dir) => {
+    Entry("txt_length_hist", (s, dir) => {
       docs(s, dir)
         .select((floor(length(col("text")) / 100) * 100).as("bucket_lo"))
         .groupBy("bucket_lo").agg(count(lit(1)).as("n_docs"))
         .orderBy("bucket_lo")
-    }),
+    }, oracle =
+      """SELECT (length(text) // 100 * 100)::BIGINT AS bucket_lo,
+           count(*) AS n_docs
+         FROM documents GROUP BY 1 ORDER BY 1"""),
 
     // corpus top terms: explode -> count -> top-k (oracled)
-    "txt_top_terms" -> ((s, dir) => {
+    Entry("txt_top_terms", (s, dir) => {
       docs(s, dir).repartition(col("doc_id"))
         .select(explode(TextAnalysis.tokens(col("text"))).as("token"))
         .groupBy("token").agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("token").asc)
         .limit(20)
-    }),
+    }, oracle =
+      """SELECT token, count(*) AS cnt FROM (
+           SELECT unnest(string_split_regex(trim(text), '\s+')) AS token
+           FROM documents)
+         GROUP BY token ORDER BY cnt DESC, token ASC LIMIT 20"""),
 
     // heavy hitters, the scale-path twin of txt_top_terms: candidates
     // from a 25% md5-coin doc sample, exact counts via broadcast
     // semi-join — bounded shuffle instead of full-vocab shuffle. The
     // oracle is the plain exact top-k SQL: the contract certifies the
     // sampled candidate generation recovered the exact answer
-    "txt_heavy_hitters" -> ((s, dir) => {
+    Entry("txt_heavy_hitters", (s, dir) => {
       TextAnalysis.heavyHitters(docs(s, dir), "doc_id", "text",
         k = 15, candidates = 150, samplePct = 25)
-    }),
+    }, oracle =
+      // the exact answer, plainly: certifies that heavyHitters'
+      // sample-generated candidate set recovered the true top-k
+      """SELECT token, count(*)::BIGINT AS n FROM (
+           SELECT unnest(string_split_regex(trim(text), '\s+')) AS token
+           FROM documents)
+         GROUP BY token ORDER BY n DESC, token ASC LIMIT 15"""),
 
     // BPE tokenizer TRAINING: the merge trajectory itself is the output
     // — 8 greedy (max-count, lex-least) pair merges over the corpus
@@ -1390,8 +2510,9 @@ object Pipeline {
     // unrolled CTEs (the kmeans/MMR trajectory pattern), so a
     // divergence in ANY iteration's count, tie-break, or merge
     // application turns the row red.
-    "txt_bpe" -> ((s, dir) =>
-      Bpe.train(docs(s, dir), "text", nMerges = 8).orderBy("step")),
+    Entry("txt_bpe", (s, dir) =>
+      Bpe.train(docs(s, dir), "text", nMerges = 8).orderBy("step"),
+      oracle = bpeOracleSql(8)),
 
     // ENCODE under the trained tokenizer: per-doc token/word counts
     // with the 8 learned merges applied in training order. The merge
@@ -1400,11 +2521,11 @@ object Pipeline {
     // as literals; the merge chain is evaluated once per DISTINCT word
     // and joined back to per-doc occurrences (the Zipf trick), so the
     // corpus never passes through the merge expressions.
-    "txt_bpe_tokens" -> ((s, dir) => {
+    Entry("txt_bpe_tokens", (s, dir) => {
       Bpe.encodeTokenCounts(docs(s, dir), "doc_id", "text",
           trainedMerges(s, dir))
         .orderBy("doc_id")
-    }),
+    }, oracle = bpeTokensOracleSql(8)),
 
     // the token-budget admission gate driven by the REAL tokenizer:
     // same per-language best-quality-first running sum as
@@ -1414,7 +2535,7 @@ object Pipeline {
     // tokens; an estimate drifts with language and formatting). Docs
     // with no alphabetic words have no token count and drop (inner
     // join, both engines).
-    "ds_token_budget_bpe" -> ((s, dir) => {
+    Entry("ds_token_budget_bpe", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val toks = Bpe.encodeTokenCounts(docs(s, dir), "doc_id", "text",
         trainedMerges(s, dir)).select(col("doc_id"), col("n_tokens"))
@@ -1428,7 +2549,20 @@ object Pipeline {
           lit(0L)))
         .filter(col("spent") < 5000L)
         .select("doc_id", "lang", "n_tokens").orderBy("doc_id")
-    }),
+    }, oracle =
+      s"""${bpeCtes(8)},
+         ${bpeEncodeCtes(8)},
+         $QualityBaseCtes,
+         qual AS (SELECT doc_id, $QualityExprSql AS quality FROM base),
+         ranked AS (SELECT d.doc_id, d.lang, t.n_tokens,
+             coalesce(sum(t.n_tokens) OVER (PARTITION BY d.lang
+               ORDER BY q.quality DESC, d.doc_id ASC
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+               0)::BIGINT AS spent
+           FROM documents d JOIN qual q USING (doc_id)
+           JOIN btok t USING (doc_id))
+         SELECT doc_id, lang, n_tokens FROM ranked
+         WHERE spent < 5000 ORDER BY doc_id"""),
 
     // the tokenizer ARTIFACT round trip (certification, like
     // dd_incremental_idx / ds_curate_staged): train → writeMerges
@@ -1437,7 +2571,7 @@ object Pipeline {
     // DEMANDED back) → encode. Oracled against the same per-doc counts
     // as txt_bpe_tokens — green only if the shipped artifact reproduces
     // the in-process tokenizer exactly.
-    "txt_bpe_artifact" -> ((s, dir) => {
+    Entry("txt_bpe_artifact", (s, dir) => {
       val path = scratchPath("graft_bpe_merges", dir)
       // write-once-per-JVM, like the steady minhash index: the train +
       // write is setup (landing in the bench's untimed warmup); every
@@ -1451,13 +2585,15 @@ object Pipeline {
       val merges = Bpe.readMerges(s, path, expectedSource = Some(dir))
       Bpe.encodeTokenCounts(docs(s, dir), "doc_id", "text", merges)
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // the artifact round trip must land on the identical counts
+      bpeTokensOracleSql(8)),
 
     // TF-IDF per (doc, term): the classic feature-extraction join.
     // round(6) absorbs potential last-ulp libm log() differences.
     // The corpus size joins in as a broadcast scalar aggregate — one job,
     // no driver-side count() during plan construction.
-    "txt_tfidf" -> ((s, dir) => {
+    Entry("txt_tfidf", (s, dir) => {
       val d = docs(s, dir).repartition(col("doc_id"))
       val nDocs = d.agg(count(lit(1)).cast("double").as("n_docs"))
       val terms = d.select(col("doc_id"),
@@ -1471,49 +2607,105 @@ object Pipeline {
         .filter(col("doc_id") < 10)
         .select("doc_id", "token", "tf", "df", "tfidf")
         .orderBy("doc_id", "token")
-    }),
+    }, oracle =
+      """WITH terms AS (
+           SELECT doc_id, unnest(string_split_regex(trim(text), '\s+'))
+             AS token
+           FROM documents),
+         tf AS (SELECT doc_id, token, count(*) AS tf FROM terms
+                GROUP BY 1, 2),
+         dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
+         n AS (SELECT count(*)::DOUBLE AS n_docs FROM documents)
+         SELECT doc_id, tf.token, tf, df,
+           round(tf * ln(n_docs / df), 6) AS tfidf
+         FROM tf JOIN dfreq ON tf.token = dfreq.token CROSS JOIN n
+         WHERE doc_id < 10
+         ORDER BY doc_id, tf.token"""),
 
     // long-doc chunking into 64-token windows with 16-token overlap
     // (oracled)
-    "txt_chunks" -> ((s, dir) => {
+    Entry("txt_chunks", (s, dir) => {
       Prep.chunk(docs(s, dir).filter(col("doc_id") < 20), "doc_id", "text",
           chunkTokens = 64, overlap = 16)
         .orderBy("doc_id", "chunk_idx")
-    }),
+    }, oracle =
+      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+')
+             AS tk FROM documents WHERE doc_id < 20),
+         st AS (SELECT doc_id, tk,
+                  range(0, greatest(len(tk)-1, 0)+1, 48) AS starts FROM t),
+         ch AS (SELECT doc_id, i.i AS chunk_idx,
+                  tk[starts[i.i+1]+1 : starts[i.i+1]+64] AS ctoks
+                FROM st CROSS JOIN unnest(range(0, 1000)) AS i(i)
+                WHERE i.i < len(starts))
+         SELECT doc_id, chunk_idx::INT AS chunk_idx,
+           len(ctoks)::BIGINT AS chunk_tokens,
+           array_to_string(ctoks, ' ') AS chunk_text
+         FROM ch ORDER BY doc_id, chunk_idx"""),
 
     // deterministic md5 train/val/test split (oracled)
-    "ds_split" -> ((s, dir) => {
+    Entry("ds_split", (s, dir) => {
       Prep.hashSplit(docs(s, dir), "doc_id", trainPct = 90, valPct = 5)
         .select("doc_id", "bucket", "split")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id, bucket,
+           CASE WHEN bucket < 90 THEN 'train'
+                WHEN bucket < 95 THEN 'val' ELSE 'test' END AS split
+         FROM (SELECT doc_id,
+                 (('0x' || substr(md5('split:' || doc_id::VARCHAR),1,8))
+                   ::BIGINT % 100) AS bucket
+               FROM documents)
+         ORDER BY doc_id"""),
 
     // deterministic global shuffle: every doc's position in the
     // md5-permuted training order, computed with the two-phase
     // bucket-prefix rank — no global single-partition window (oracled:
     // DuckDB's row_number over the same hash ordering)
-    "ds_shuffle" -> ((s, dir) => {
+    Entry("ds_shuffle", (s, dir) => {
       Prep.deterministicShuffle(docs(s, dir), "doc_id")
         .select("doc_id", "shuffle_pos")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id,
+           row_number() OVER (
+             ORDER BY md5('shuffle:' || doc_id::VARCHAR) ASC, doc_id ASC
+           )::BIGINT AS shuffle_pos
+         FROM documents ORDER BY doc_id"""),
 
     // deterministic stratified sample: 3 docs per language by md5 rank
     // (oracled — unlike random() sampling, hash rank replays exactly)
-    "ds_group_sample" -> ((s, dir) => {
+    Entry("ds_group_sample", (s, dir) => {
       Prep.groupSample(docs(s, dir), "doc_id", "lang", perGroup = 3)
         .select("doc_id", "lang")
         .orderBy("lang", "doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id, lang FROM (
+           SELECT doc_id, lang,
+             row_number() OVER (PARTITION BY lang
+               ORDER BY md5('sample:' || doc_id::VARCHAR) ASC, doc_id ASC)
+               AS rn
+           FROM documents)
+         WHERE rn <= 3 ORDER BY lang, doc_id"""),
 
     // sequence packing into 512-token bins over 8 shards (oracled)
-    "ds_pack" -> ((s, dir) => {
+    Entry("ds_pack", (s, dir) => {
       val d = docs(s, dir).select(col("doc_id"),
         TextAnalysis.tokenCount(col("text")).as("n_tok"))
       Prep.packSequences(d, "doc_id", "n_tok", maxTokens = 512, shards = 8)
         .select("doc_id", "shard", "n_tokens", "bin")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """WITH d AS (SELECT doc_id,
+             len(string_split_regex(trim(text), '\s+'))::BIGINT AS n_tokens,
+             (('0x' || substr(md5('pack:' || doc_id::VARCHAR),1,8))
+               ::BIGINT % 8) AS shard
+           FROM documents)
+         SELECT doc_id, shard, n_tokens,
+           floor(coalesce(sum(n_tokens) OVER (PARTITION BY shard
+             ORDER BY doc_id
+             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+             / 512)::BIGINT AS bin
+         FROM d ORDER BY doc_id"""),
 
     // end-to-end curation decision table: quality gate -> language gate ->
     // exact dedup -> near-dup keep-first -> benchmark decontamination ->
@@ -1521,12 +2713,24 @@ object Pipeline {
     // bench = doc_id < 50 (the dd_contam convention). Every stage flag
     // lands in the output, NULL when the doc never reached the stage
     // (oracled)
-    "ds_curate" -> ((s, dir) => {
+    Entry("ds_curate", (s, dir) => {
       val d = docs(s, dir)
       Curate.decisionTable(d.filter(col("doc_id") >= 50),
           d.filter(col("doc_id") < 50), "doc_id", "text")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // the curation decision table composes the per-stage oracles above
+      // (txt_quality, txt_langid, dd_exact, dd_survivors, dd_contam,
+      // ds_split) into one sequential-gate pipeline; each stage's formula
+      // is byte-identical to its standalone oracle, re-scoped to the docs
+      // that survived the previous gate
+      (curateDecisionCtes + """
+         SELECT doc_id, quality, lang_pred, q_ok, lang_ok, exact_dup,
+           near_dup, contaminated, kept, bucket,
+           CASE WHEN kept = 1 THEN
+             (CASE WHEN bucket < 90 THEN 'train'
+                   WHEN bucket < 95 THEN 'val' ELSE 'test' END) END AS split
+         FROM dec2 ORDER BY doc_id""")),
 
     // curation composed with the per-domain cap — the full modern
     // pre-training pass: gates -> dedup -> decontamination -> split,
@@ -1542,7 +2746,7 @@ object Pipeline {
     // guide §3 join elimination; the oracle's survivors CTE reads
     // dec2.quality, i.e. the decision table's score, so the two stages
     // agree by construction)
-    "ds_curate_capped" -> ((s, dir) => {
+    Entry("ds_curate_capped", (s, dir) => {
       val d = docs(s, dir)
       val kept = Curate.decisionTable(d.filter(col("doc_id") >= 50),
           d.filter(col("doc_id") < 50), "doc_id", "text",
@@ -1553,7 +2757,24 @@ object Pipeline {
           Seq(col("quality").desc, col("doc_id").asc))
         .select("doc_id", "source", "quality", "split")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // curation + per-domain cap: the decision chain's survivors joined
+      // back for source, then the same (quality desc, id) row_number cut
+      // the ds_cap_source oracle uses — dec2 already carries the quality
+      // the cap ranks on, so the two stages can't disagree about scores
+      (curateDecisionCtes + """,
+         survivors AS (
+           SELECT d.doc_id, doc.source, d.quality,
+             CASE WHEN d.bucket < 90 THEN 'train'
+                  WHEN d.bucket < 95 THEN 'val' ELSE 'test' END AS split
+           FROM dec2 d JOIN documents doc ON doc.doc_id = d.doc_id
+           WHERE d.kept = 1),
+         capped AS (
+           SELECT *, row_number() OVER (PARTITION BY source
+               ORDER BY quality DESC, doc_id ASC) AS rn
+           FROM survivors)
+         SELECT doc_id, source, quality, split FROM capped
+         WHERE rn <= 10 ORDER BY doc_id""")),
 
     // the staged-materialization twin certified on its ARTIFACT: run
     // curateStaged (each stage written to parquet, next stage reads it
@@ -1562,14 +2783,25 @@ object Pipeline {
     // pipeline in DuckDB, so the files a 100 TB run would audit are
     // cross-engine-verified, not just spec-pinned equal to the
     // single-plan form (oracled)
-    "ds_curate_staged" -> ((s, dir) => {
+    Entry("ds_curate_staged", (s, dir) => {
       val d = docs(s, dir)
       val stageDir = scratchPath("graft_curate_stages", dir)
       Curate.curateStaged(d.filter(col("doc_id") >= 50),
         d.filter(col("doc_id") < 50), "doc_id", "text", stageDir)
       s.read.parquet(s"$stageDir/clean")
         .select("doc_id", "text", "bucket", "split").orderBy("doc_id")
-    }),
+    }, oracle =
+      // the STAGED curation artifact: what the restartable form writes as
+      // its final stage parquet — the kept docs with their split
+      // assignment. Same CTE chain; the certification here is that the
+      // parquet files a 100 TB run would audit hold exactly the decision
+      // table's kept set
+      (curateDecisionCtes + """
+         SELECT dec2.doc_id, c.text, bucket,
+           CASE WHEN bucket < 90 THEN 'train'
+                WHEN bucket < 95 THEN 'val' ELSE 'test' END AS split
+         FROM dec2 JOIN corpus c ON dec2.doc_id = c.doc_id
+         WHERE kept = 1 ORDER BY dec2.doc_id""")),
 
     // streaming INGEST, certified through its batch collapse (r14 — the
     // ev_attrib argument applied to docs): DocsStreaming.ingestBatch
@@ -1580,7 +2812,7 @@ object Pipeline {
     // every 5th doc's hashes; the rest arrive as the drop with a
     // deterministic doc_id-derived arrival time. The oracle replays
     // gates, keep-first, the anti-probe, and both token counts
-    "ds_ingest" -> ((s, dir) => {
+    Entry("ds_ingest", (s, dir) => {
       val d = docs(s, dir)
       val landed = d.filter(col("doc_id") % 5 === 0)
       val drop = d.filter(col("doc_id") % 5 =!= 0)
@@ -1592,15 +2824,89 @@ object Pipeline {
           col("n_tokens").cast("long").as("n_tokens"),
           col("n_tokens_est").cast("long").as("n_tokens_est"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // the batch collapse of streaming ingest: quality+lang gates over
+      // the non-landed docs, keep-first (lowest doc_id — arrival order is
+      // doc_id-derived) per content hash, anti-probe against the landed
+      // hashes, token accounting. Quality/lang expressions are the
+      // curateDecisionCtes twins over the drop relation.
+      """WITH landed AS (SELECT DISTINCT md5(text) AS content_hash
+             FROM documents WHERE doc_id % 5 = 0),
+         dm AS (SELECT doc_id, text,
+                  string_split_regex(trim(text), '\s+') AS toks,
+                  length(text) AS len
+                FROM documents WHERE doc_id % 5 != 0),
+         qual AS (
+           SELECT doc_id,
+             floor(((CASE WHEN len(toks) BETWEEN 10 AND 10000
+                 THEN 1.0 ELSE 0.3 END) * 0.4
+               + least(round(len(list_filter(toks, x -> list_contains(
+                   ['the','a','an','and','or','of','to','in','is','it','that',
+                    'for','on','with','as','at','by','this'], lower(x))))::DOUBLE /
+                 greatest(len(toks), 1), 4) * 5.0, 1.0) * 0.3
+               + round(len(regexp_extract_all(text, '[A-Za-z]'))::DOUBLE /
+                 greatest(len, 1), 4) * 0.3) * 10000 + 0.5) / 10000 AS quality
+           FROM dm),
+         lt AS (SELECT doc_id,
+                  string_split_regex(trim(lower(text)), '\s+') AS ltoks
+                FROM dm),
+         ls AS (
+           SELECT doc_id,
+             len(list_filter(ltoks, x -> list_contains(
+               ['der','die','das','und','ist','nicht','mit','ein'], x)))::DOUBLE
+               / greatest(len(ltoks), 1) AS s_de,
+             len(list_filter(ltoks, x -> list_contains(
+               ['the','and','of','to','in','is','that','with'], x)))::DOUBLE
+               / greatest(len(ltoks), 1) AS s_en,
+             len(list_filter(ltoks, x -> list_contains(
+               ['el','la','los','y','es','no','con','una'], x)))::DOUBLE
+               / greatest(len(ltoks), 1) AS s_es,
+             len(list_filter(ltoks, x -> list_contains(
+               ['le','la','les','et','est','pas','avec','une'], x)))::DOUBLE
+               / greatest(len(ltoks), 1) AS s_fr,
+             len(list_filter(ltoks, x -> list_contains(
+               ['的','是','不','了','在','和','有','我'], x)))::DOUBLE
+               / greatest(len(ltoks), 1) AS s_zh
+           FROM lt),
+         lang AS (
+           SELECT doc_id,
+             CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
+                  WHEN s_de >= greatest(s_en, s_es, s_fr, s_zh) THEN 'de'
+                  WHEN s_en >= greatest(s_es, s_fr, s_zh) THEN 'en'
+                  WHEN s_es >= greatest(s_fr, s_zh) THEN 'es'
+                  WHEN s_fr >= s_zh THEN 'fr'
+                  ELSE 'zh' END AS lang_pred
+           FROM ls),
+         gated AS (
+           SELECT m.doc_id, m.text, md5(m.text) AS content_hash
+           FROM dm m JOIN qual q USING (doc_id) JOIN lang l USING (doc_id)
+           WHERE q.quality >= 0.5 AND l.lang_pred = 'en'),
+         kept AS (
+           SELECT doc_id, text, content_hash FROM (
+             SELECT *, row_number() OVER (PARTITION BY content_hash
+                 ORDER BY doc_id ASC) AS rn
+             FROM gated) WHERE rn = 1),
+         fresh AS (
+           SELECT k.doc_id, k.text, k.content_hash
+           FROM kept k LEFT JOIN landed l ON l.content_hash = k.content_hash
+           WHERE l.content_hash IS NULL)
+         SELECT doc_id, content_hash,
+           len(string_split_regex(trim(text), '\s+'))::BIGINT AS n_tokens,
+           greatest(
+             len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')),
+             ceil(length(text) / 4)::INT)::BIGINT AS n_tokens_est
+         FROM fresh ORDER BY doc_id"""),
 
     // multimodal metadata plumbing (oracled: byte length + checksum)
-    "mm_meta" -> ((s, dir) => {
+    Entry("mm_meta", (s, dir) => {
       Multimodal.attachPayload(docs(s, dir), "text", "image/png")
         .select(col("doc_id"), col("media_meta.byte_len").as("byte_len"),
           col("media_meta.checksum").as("checksum"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id, octet_length(text::BLOB)::BIGINT AS byte_len,
+           md5(text) AS checksum
+         FROM documents ORDER BY doc_id"""),
 
     // multimodal featurize through the batched mapPartitions path with a
     // REAL decode: each doc's payload is a genuine PNG (signature, chunk
@@ -1609,7 +2915,7 @@ object Pipeline {
     // inflate, scanline unfilter, pixel means), and the oracle computes
     // the same dims/channel values directly from the doc columns — green
     // only if decode(encode(x)) == x for every row
-    "mm_features" -> ((s, dir) => {
+    Entry("mm_features", (s, dir) => {
       val pngUdf = udf((id: Long, nChars: Long) =>
         graft.operators.MediaCodec.pngEncodeSolid(
           w = (8 + id % 32).toInt, h = (8 + nChars % 32).toInt,
@@ -1627,7 +2933,15 @@ object Pipeline {
           element_at(col("feature"), 2).cast("int").as("mean_g"),
           element_at(col("feature"), 3).cast("int").as("mean_b"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id,
+           (8 + doc_id % 32)::INT AS width,
+           (8 + n_chars % 32)::INT AS height,
+           1 AS n_frames,
+           (doc_id % 256)::INT AS mean_r,
+           (doc_id * 7 % 256)::INT AS mean_g,
+           ((doc_id * 13 + 5) % 256)::INT AS mean_b
+         FROM documents ORDER BY doc_id"""),
 
     // real AUDIO round-trip, same certification shape as mm_features:
     // synthesize a deterministic PCM16 WAV per doc (mono/stereo by id
@@ -1638,7 +2952,7 @@ object Pipeline {
     // amp/32768 is a dyadic rational — exact in both engines, so the
     // amplitudes compare as exact ints (x32768), no rounding policy
     // needed. Green only if decode(encode(x)) == x for every row.
-    "mm_audio" -> ((s, dir) => {
+    Entry("mm_audio", (s, dir) => {
       val wavUdf = udf((id: Long, nChars: Long) => {
         val channels = 1 + (id % 2).toInt
         val frames = (64 + nChars % 128).toInt
@@ -1665,7 +2979,17 @@ object Pipeline {
             (element_at(col("feature"), 2) * 32768).cast("int"))
             .otherwise(lit(-1)).as("amp_2"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      """SELECT doc_id,
+           8000 AS sample_rate,
+           (1 + doc_id % 2)::INT AS channels,
+           (64 + n_chars % 128)::INT AS n_frames,
+           ((64 + n_chars % 128) * 1000 // 8000)::BIGINT AS duration_ms,
+           ((doc_id * 31) % 20000 + 1000)::INT AS amp_1,
+           (CASE WHEN doc_id % 2 = 1
+              THEN (doc_id * 31 + 17) % 20000 + 1000 ELSE -1 END)::INT
+             AS amp_2
+         FROM documents ORDER BY doc_id"""),
 
     // real VIDEO round-trip, completing the media triple: synthesize a
     // deterministic AVI per doc (RIFF container, avih/strh/strf headers,
@@ -1678,7 +3002,7 @@ object Pipeline {
     // n_sampled (both engines round the half-ulp away) keeps the
     // compare in exact integers. Green only if demux+decode inverts the
     // container encoding for every row.
-    "mm_video" -> ((s, dir) => {
+    Entry("mm_video", (s, dir) => {
       val aviUdf = udf((id: Long, nChars: Long) => {
         val w = (4 + id % 8).toInt; val h = (4 + nChars % 8).toInt
         val n = (3 + nChars % 6).toInt
@@ -1706,7 +3030,22 @@ object Pipeline {
           chanSum(1).as("sum_r"), chanSum(2).as("sum_g"),
           chanSum(3).as("sum_b"))
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      // sampled indices are range(0, n, 2) — the stride-2 frame sample;
+      // per-channel sums over those indices are exact ints in both engines
+      """SELECT doc_id,
+           (4 + doc_id % 8)::INT AS width,
+           (4 + n_chars % 8)::INT AS height,
+           25 AS fps,
+           (3 + n_chars % 6)::INT AS n_frames,
+           ((3 + n_chars % 6 + 1) // 2)::INT AS n_sampled,
+           list_sum(list_transform(range(0, (3 + n_chars % 6)::INT, 2),
+             i -> (doc_id * 7 + i * 13) % 256))::INT AS sum_r,
+           list_sum(list_transform(range(0, (3 + n_chars % 6)::INT, 2),
+             i -> (doc_id * 11 + i * 29) % 256))::INT AS sum_g,
+           list_sum(list_transform(range(0, (3 + n_chars % 6)::INT, 2),
+             i -> (doc_id * 3 + i * 41 + 5) % 256))::INT AS sum_b
+         FROM documents ORDER BY doc_id"""),
 
     // perceptual-hash IMAGE dedup (r15): each doc gets a REAL grayscale
     // PNG (18x16, 2x2-constant boxes) whose 9x8 luma grid walks +-5 per
@@ -1722,7 +3061,7 @@ object Pipeline {
     // both hash derivations, and the banded recall are ALL bit-exact.
     // Sliced to doc_id < 1000 so the oracle's n^2 pair space stays
     // bounded at every sf (the Spark side never materializes n^2).
-    "mm_dedup" -> ((s, dir) => {
+    Entry("mm_dedup", (s, dir) => {
       val pngUdf = udf((id: Long) => {
         val g = (id % 16).toInt
         val grid = Array.ofDim[Int](8, 9)
@@ -1758,7 +3097,54 @@ object Pipeline {
           bit_count(col("ah_a").bitwiseXOR(col("ah_b"))).cast("int")
             .as("hamming_a"))
         .orderBy("id_a", "id_b")
-    }),
+    }, oracle =
+      // the perceptual-hash rig's fingerprints, rebuilt CLOSED-FORM from
+      // doc_id (planted gradient bits + their prefix sums — see the
+      // mm_dedup query comment), then a brute-force pair join: matches
+      // Spark's decode->resample->hash->banded chain only if every stage
+      // is bit-exact. Bit 63 is never set on either hash, so BIGINT
+      // shifts/xor agree across engines.
+      """WITH d AS (SELECT doc_id, (doc_id % 16)::BIGINT AS g
+               FROM documents WHERE doc_id < 1000),
+         bits AS (SELECT d.doc_id, j.j,
+             CASE WHEN (d.doc_id % 3 = 0 AND j.j = d.doc_id % 63)
+                  THEN 1 - (CASE WHEN ((d.g*131 + j.j*37) % 97) < 41
+                            THEN 1 ELSE 0 END)
+                  ELSE (CASE WHEN ((d.g*131 + j.j*37) % 97) < 41
+                        THEN 1 ELSE 0 END)
+             END::BIGINT AS bit
+           FROM d CROSS JOIN unnest(range(0, 63)) AS j(j)),
+         dh AS (SELECT doc_id, sum(bit << j)::BIGINT AS dhash
+                FROM bits GROUP BY doc_id),
+         gridc AS (SELECT cy.cy, cx.cx
+                   FROM unnest(range(0, 8)) AS cy(cy)
+                   CROSS JOIN unnest(range(0, 8)) AS cx(cx)),
+         pre AS (SELECT d.doc_id, c.cy, c.cx,
+                   COALESCE(sum(b.bit), 0) AS sb
+                 FROM d CROSS JOIN gridc c
+                 LEFT JOIN bits b ON b.doc_id = d.doc_id
+                   AND b.j >= c.cy*8 AND b.j < c.cy*8 + c.cx
+                 GROUP BY d.doc_id, c.cy, c.cx),
+         cells AS (SELECT p.doc_id, p.cy, p.cx,
+                     100 + ((d.g*13 + p.cy*7) % 40)
+                       + 5*(2*p.sb - p.cx) AS v
+                   FROM pre p JOIN d ON d.doc_id = p.doc_id),
+         tots AS (SELECT doc_id, sum(v) AS tot FROM cells
+                  GROUP BY doc_id),
+         ah AS (SELECT c.doc_id,
+                  sum(CASE WHEN c.cy*8 + c.cx < 63 AND c.v*64 > t.tot
+                      THEN 1::BIGINT << (c.cy*8 + c.cx)
+                      ELSE 0 END)::BIGINT AS ahash
+                FROM cells c JOIN tots t ON t.doc_id = c.doc_id
+                GROUP BY c.doc_id),
+         fp AS (SELECT dh.doc_id, dh.dhash, ah.ahash
+                FROM dh JOIN ah ON ah.doc_id = dh.doc_id)
+         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+           bit_count(xor(a.dhash, b.dhash))::INT AS hamming_d,
+           bit_count(xor(a.ahash, b.ahash))::INT AS hamming_a
+         FROM fp a JOIN fp b ON a.doc_id < b.doc_id
+         WHERE bit_count(xor(a.dhash, b.dhash)) <= 3
+         ORDER BY id_a, id_b"""),
 
     // perceptual AUDIO dedup (r15): mm_dedup's construction applied to
     // waveforms — each doc gets a REAL PCM16 WAV of 65 constant-
@@ -1771,7 +3157,7 @@ object Pipeline {
     // means -> gradient hash -> hammingPairs); the oracle rebuilds the
     // fingerprints closed-form from doc_id and brute-forces the pair
     // join. Sliced to doc_id < 1000 to bound the oracle's n^2 space.
-    "mm_audio_dedup" -> ((s, dir) => {
+    Entry("mm_audio_dedup", (s, dir) => {
       val wavUdf = udf((id: Long) => {
         val g = (id % 16).toInt
         // start 12000, step +-150: the walk stays in [2400, 23600] —
@@ -1799,7 +3185,30 @@ object Pipeline {
         .select(col("id_a"), col("id_b"),
           col("hamming").cast("int").as("hamming"))
         .orderBy("id_a", "id_b")
-    }),
+    }, oracle =
+      // the audio rig's envelope hash collapses closed-form to the
+      // planted bits themselves (+-150 steps are strictly monotone, the
+      // walk stays positive so |sample| == amplitude): rebuild each
+      // doc's fingerprint from doc_id and brute-force the pair join —
+      // matches Spark's wav-decode -> window -> gradient chain only if
+      // every integer stage is bit-exact
+      """WITH d AS (SELECT doc_id, (doc_id % 16)::BIGINT AS g
+               FROM documents WHERE doc_id < 1000),
+         bits AS (SELECT d.doc_id, j.j,
+             CASE WHEN (d.doc_id % 3 = 1 AND j.j = d.doc_id % 63)
+                  THEN 1 - (CASE WHEN ((d.g*113 + j.j*41) % 89) < 37
+                            THEN 1 ELSE 0 END)
+                  ELSE (CASE WHEN ((d.g*113 + j.j*41) % 89) < 37
+                        THEN 1 ELSE 0 END)
+             END::BIGINT AS bit
+           FROM d CROSS JOIN unnest(range(0, 63)) AS j(j)),
+         fp AS (SELECT doc_id, sum(bit << j)::BIGINT AS ehash
+                FROM bits GROUP BY doc_id)
+         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+           bit_count(xor(a.ehash, b.ehash))::INT AS hamming
+         FROM fp a JOIN fp b ON a.doc_id < b.doc_id
+         WHERE bit_count(xor(a.ehash, b.ehash)) <= 3
+         ORDER BY id_a, id_b"""),
 
     // perceptual VIDEO dedup (r15): near-dup videos by FRAME-SET
     // overlap — each doc gets a REAL 5-frame Motion-PNG AVI whose
@@ -1812,7 +3221,7 @@ object Pipeline {
     // join on the frame fingerprint); the oracle rebuilds every
     // frame's dhash closed-form from (doc_id, frame) and replays the
     // set-jaccard join. Sliced to doc_id < 400 to bound the rig.
-    "mm_video_dedup" -> ((s, dir) => {
+    Entry("mm_video_dedup", (s, dir) => {
       val aviUdf = udf((id: Long) => {
         val g = (id % 8).toInt
         def frame(seed: Int): Array[Byte] = {
@@ -1850,7 +3259,45 @@ object Pipeline {
         .select(col("id_a"), col("id_b"),
           col("n_shared").cast("bigint").as("n_shared"), col("jaccard"))
         .orderBy("id_a", "id_b")
-    }),
+    }, oracle =
+      // the video rig's frame fingerprints rebuilt closed-form per
+      // (doc_id, frame seed), then the set-jaccard join replayed —
+      // matches Spark's demux -> per-frame decode -> dHash ->
+      // inverted-index chain only if every frame hashes bit-exact. The
+      // stop-frame prune (maxDocFreq = 60) is replayed too: join sides
+      // exclude frames with doc-freq > 60, set sizes stay unpruned —
+      // the exact semantics videoDedupPairs implements
+      """WITH d AS (SELECT doc_id, (doc_id % 8)::BIGINT AS g
+               FROM documents WHERE doc_id < 400),
+         fr AS (SELECT d.doc_id,
+                  CASE WHEN d.doc_id % 3 = 0 AND k.k = 2
+                       THEN 2000 + d.doc_id ELSE d.g*8 + k.k END AS s
+                FROM d CROSS JOIN unnest(range(0, 5)) AS k(k)),
+         fb AS (SELECT doc_id, s, j.j,
+                  (CASE WHEN ((s*131 + j.j*37) % 97) < 41
+                   THEN 1 ELSE 0 END)::BIGINT AS bit
+                FROM fr CROSS JOIN unnest(range(0, 63)) AS j(j)),
+         fh AS (SELECT DISTINCT doc_id, dhash FROM (
+                  SELECT doc_id, s, sum(bit << j)::BIGINT AS dhash
+                  FROM fb GROUP BY doc_id, s)),
+         sz AS (SELECT doc_id, count(*) AS n FROM fh GROUP BY doc_id),
+         stopf AS (SELECT dhash FROM fh GROUP BY dhash
+                   HAVING count(*) > 60),
+         fhp AS (SELECT doc_id, dhash FROM fh
+                 WHERE dhash NOT IN (SELECT dhash FROM stopf)),
+         pr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                  count(*)::BIGINT AS n_shared
+                FROM fhp a JOIN fhp b
+                  ON a.dhash = b.dhash AND a.doc_id < b.doc_id
+                GROUP BY a.doc_id, b.doc_id)
+         SELECT p.id_a, p.id_b, p.n_shared,
+           round(p.n_shared::DOUBLE / (sa.n + sb.n - p.n_shared), 4)
+             AS jaccard
+         FROM pr p JOIN sz sa ON sa.doc_id = p.id_a
+         JOIN sz sb ON sb.doc_id = p.id_b
+         WHERE round(p.n_shared::DOUBLE / (sa.n + sb.n - p.n_shared), 4)
+           >= 0.5
+         ORDER BY id_a, id_b"""),
 
     // perceptual dedup routed into CURATION (r17, r16 verdict #4): the
     // mm_dedup rig's image near-dup pairs feed connectedComponents ->
@@ -1862,7 +3309,7 @@ object Pipeline {
     // survive; the oracle rebuilds the dhashes closed-form, brute-forces
     // the banded pair set, and replays the min-label transitive closure
     // as a recursive CTE.
-    "mm_survivors" -> ((s, dir) => {
+    Entry("mm_survivors", (s, dir) => {
       val pngUdf = udf((id: Long) => {
         val g = (id % 16).toInt
         val grid = Array.ofDim[Int](8, 9)
@@ -1890,7 +3337,39 @@ object Pipeline {
       graft.operators.Dedup.keepFirstExact(
           withPayload.select("doc_id"), "doc_id", pairs)
         .select("doc_id").orderBy("doc_id")
-    }),
+    }, oracle =
+      // perceptual CURATION: the mm_dedup dhash construction rebuilt
+      // closed-form, the banded pair set brute-forced (recall is exact
+      // at hamming <= 3, so brute force IS the banded answer), then
+      // min-label transitive closure (the dd_survivors_exact recursion)
+      // and one survivor per component — keepFirstExact on pixels
+      """WITH RECURSIVE d AS (SELECT doc_id, (doc_id % 16)::BIGINT AS g
+               FROM documents WHERE doc_id < 1000),
+         bits AS (SELECT d.doc_id, j.j,
+             CASE WHEN (d.doc_id % 3 = 0 AND j.j = d.doc_id % 63)
+                  THEN 1 - (CASE WHEN ((d.g*131 + j.j*37) % 97) < 41
+                            THEN 1 ELSE 0 END)
+                  ELSE (CASE WHEN ((d.g*131 + j.j*37) % 97) < 41
+                        THEN 1 ELSE 0 END)
+             END::BIGINT AS bit
+           FROM d CROSS JOIN unnest(range(0, 63)) AS j(j)),
+         dh AS (SELECT doc_id, sum(bit << j)::BIGINT AS dhash
+                FROM bits GROUP BY doc_id),
+         prs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
+                 FROM dh a JOIN dh b ON a.doc_id < b.doc_id
+                 WHERE bit_count(xor(a.dhash, b.dhash)) <= 3),
+         edges AS (SELECT id_a AS a, id_b AS b FROM prs
+                   UNION SELECT id_b, id_a FROM prs),
+         reach(a, b) AS (
+           SELECT a, a FROM (SELECT DISTINCT a FROM edges)
+           UNION
+           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+         labels AS (SELECT a AS doc_id, min(b) AS cluster FROM reach
+                    GROUP BY a)
+         SELECT doc_id FROM d
+         WHERE doc_id NOT IN
+           (SELECT doc_id FROM labels WHERE doc_id != cluster)
+         ORDER BY doc_id"""),
 
     // AUDIO survivors (r18, r17 verdict #6): the mm_audio_dedup wav rig's
     // perceptual pairs routed through the same curation keep policy as
@@ -1900,7 +3379,7 @@ object Pipeline {
     // collapse to one component, so 16 waveforms survive; the oracle
     // rebuilds the envelope hashes closed-form, brute-forces the banded
     // pair set, and replays the min-label transitive closure.
-    "mm_audio_survivors" -> ((s, dir) => {
+    Entry("mm_audio_survivors", (s, dir) => {
       val wavUdf = udf((id: Long) => {
         val g = (id % 16).toInt
         val amps = new Array[Int](65)
@@ -1925,7 +3404,38 @@ object Pipeline {
       graft.operators.Dedup.keepFirstExact(
           withPayload.select("doc_id"), "doc_id", pairs)
         .select("doc_id").orderBy("doc_id")
-    }),
+    }, oracle =
+      // AUDIO curation: the mm_audio_dedup envelope-hash construction
+      // rebuilt closed-form, the banded pair set brute-forced, then the
+      // same min-label transitive closure and one survivor per component
+      // — keepFirstExact on waveforms
+      """WITH RECURSIVE d AS (SELECT doc_id, (doc_id % 16)::BIGINT AS g
+               FROM documents WHERE doc_id < 1000),
+         bits AS (SELECT d.doc_id, j.j,
+             CASE WHEN (d.doc_id % 3 = 1 AND j.j = d.doc_id % 63)
+                  THEN 1 - (CASE WHEN ((d.g*113 + j.j*41) % 89) < 37
+                            THEN 1 ELSE 0 END)
+                  ELSE (CASE WHEN ((d.g*113 + j.j*41) % 89) < 37
+                        THEN 1 ELSE 0 END)
+             END::BIGINT AS bit
+           FROM d CROSS JOIN unnest(range(0, 63)) AS j(j)),
+         fp AS (SELECT doc_id, sum(bit << j)::BIGINT AS ehash
+                FROM bits GROUP BY doc_id),
+         prs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
+                 FROM fp a JOIN fp b ON a.doc_id < b.doc_id
+                 WHERE bit_count(xor(a.ehash, b.ehash)) <= 3),
+         edges AS (SELECT id_a AS a, id_b AS b FROM prs
+                   UNION SELECT id_b, id_a FROM prs),
+         reach(a, b) AS (
+           SELECT a, a FROM (SELECT DISTINCT a FROM edges)
+           UNION
+           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+         labels AS (SELECT a AS doc_id, min(b) AS cluster FROM reach
+                    GROUP BY a)
+         SELECT doc_id FROM d
+         WHERE doc_id NOT IN
+           (SELECT doc_id FROM labels WHERE doc_id != cluster)
+         ORDER BY doc_id"""),
 
     // VIDEO survivors (r18, r17 verdict #6): the mm_video_dedup avi rig's
     // frame-set-jaccard pairs (WITH the stop-frame prune in the path,
@@ -1936,7 +3446,7 @@ object Pipeline {
     // groups collapses to one component and 8 videos survive; the
     // oracle replays the jaccard join closed-form and the min-label
     // transitive closure.
-    "mm_video_survivors" -> ((s, dir) => {
+    Entry("mm_video_survivors", (s, dir) => {
       val aviUdf = udf((id: Long) => {
         val g = (id % 8).toInt
         def frame(seed: Int): Array[Byte] = {
@@ -1969,14 +3479,58 @@ object Pipeline {
       graft.operators.Dedup.keepFirstExact(
           withPayload.select("doc_id"), "doc_id", pairs)
         .select("doc_id").orderBy("doc_id")
-    }),
+    }, oracle =
+      // VIDEO curation: the mm_video_dedup frame-set-jaccard join
+      // replayed closed-form (including the inert maxDocFreq = 60
+      // stop-frame prune), then the min-label transitive closure over
+      // the threshold-passing pairs — keepFirstExact on videos
+      """WITH RECURSIVE d AS (SELECT doc_id, (doc_id % 8)::BIGINT AS g
+               FROM documents WHERE doc_id < 400),
+         fr AS (SELECT d.doc_id,
+                  CASE WHEN d.doc_id % 3 = 0 AND k.k = 2
+                       THEN 2000 + d.doc_id ELSE d.g*8 + k.k END AS s
+                FROM d CROSS JOIN unnest(range(0, 5)) AS k(k)),
+         fb AS (SELECT doc_id, s, j.j,
+                  (CASE WHEN ((s*131 + j.j*37) % 97) < 41
+                   THEN 1 ELSE 0 END)::BIGINT AS bit
+                FROM fr CROSS JOIN unnest(range(0, 63)) AS j(j)),
+         fh AS (SELECT DISTINCT doc_id, dhash FROM (
+                  SELECT doc_id, s, sum(bit << j)::BIGINT AS dhash
+                  FROM fb GROUP BY doc_id, s)),
+         sz AS (SELECT doc_id, count(*) AS n FROM fh GROUP BY doc_id),
+         stopf AS (SELECT dhash FROM fh GROUP BY dhash
+                   HAVING count(*) > 60),
+         fhp AS (SELECT doc_id, dhash FROM fh
+                 WHERE dhash NOT IN (SELECT dhash FROM stopf)),
+         pr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                  count(*)::BIGINT AS n_shared
+                FROM fhp a JOIN fhp b
+                  ON a.dhash = b.dhash AND a.doc_id < b.doc_id
+                GROUP BY a.doc_id, b.doc_id),
+         prs AS (SELECT p.id_a, p.id_b
+                 FROM pr p JOIN sz sa ON sa.doc_id = p.id_a
+                 JOIN sz sb ON sb.doc_id = p.id_b
+                 WHERE round(p.n_shared::DOUBLE
+                     / (sa.n + sb.n - p.n_shared), 4) >= 0.5),
+         edges AS (SELECT id_a AS a, id_b AS b FROM prs
+                   UNION SELECT id_b, id_a FROM prs),
+         reach(a, b) AS (
+           SELECT a, a FROM (SELECT DISTINCT a FROM edges)
+           UNION
+           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+         labels AS (SELECT a AS doc_id, min(b) AS cluster FROM reach
+                    GROUP BY a)
+         SELECT doc_id FROM d
+         WHERE doc_id NOT IN
+           (SELECT doc_id FROM labels WHERE doc_id != cluster)
+         ORDER BY doc_id"""),
   )
 
   /** DuckDB twin of Similarity.quantizeInt8 over the embeddings table:
     * identical floor-based rule (floor and IEEE division are bit-exact in
     * both engines), quantized components as exact integers in double
     * lists. */
-  private val Q8Ctes =
+  private def Q8Ctes: String =
     """emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
        sc AS (SELECT vec_id, e,
                 list_max(list_transform(e, x -> abs(x))) / 127.0 AS s
@@ -2218,7 +3772,7 @@ object Pipeline {
        FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
              FROM """ + rel + ")"
 
-  private val ShingleSql = shingleSqlFrom("documents")
+  private def ShingleSql: String = shingleSqlFrom("documents")
 
   // ------------------------------------------------------- oracle builders
   // DuckDB twins of the Md5 hash mode (Dedup.hash31/hash64/md5Planes):
@@ -2234,7 +3788,7 @@ object Pipeline {
     * recursive transitive closure — the oracle twin of
     * Dedup.connectedComponents (which iterates label propagation; both
     * converge to the component-minimum labeling). */
-  private val CcCtes =
+  private def CcCtes: String =
     s"""sh AS ($ShingleSql),
        sizes AS (SELECT doc_id, count(*) AS set_size FROM sh GROUP BY 1),
        inter AS (
@@ -2726,7 +4280,7 @@ object Pipeline {
     * by the `txt_quality` oracle and every oracle that ranks or gates on
     * the quality score (`ds_cap_source`), so "quality" can never mean
     * two different formulas in two oracles. */
-  private val QualityBaseCtes =
+  private def QualityBaseCtes: String =
     """m AS (
            SELECT doc_id, text,
              string_split_regex(trim(text), '\s+') AS toks,
@@ -2747,7 +4301,7 @@ object Pipeline {
                AS length_ok
            FROM m)"""
 
-  private val QualityExprSql =
+  private def QualityExprSql: String =
     """floor((length_ok * 0.4 + least(stopword_ratio * 5.0, 1.0) * 0.3
              + alpha_ratio * 0.3) * 10000 + 0.5) / 10000"""
 
@@ -2789,1661 +4343,6 @@ object Pipeline {
                         row_number() OVER (PARTITION BY query_id
                           ORDER BY cos DESC, neighbor_id ASC) AS rn
                       FROM scored)"""
-
-  val oracle: Map[String, String] = Map(
-    "dd_exact" ->
-      """SELECT md5(text) AS content_hash, min(doc_id) AS doc_id,
-           count(*) AS dup_count
-         FROM documents GROUP BY 1 ORDER BY doc_id""",
-    "dd_ngram_pairs" ->
-      s"""WITH sh AS ($ShingleSql),
-         sizes AS (SELECT doc_id, count(*) AS set_size FROM sh GROUP BY 1),
-         inter AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-           FROM sh a JOIN sh b
-             ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
-         SELECT id_a, id_b,
-           round(i::DOUBLE / (sa.set_size + sb.set_size - i), 4) AS jaccard
-         FROM inter
-         JOIN sizes sa ON sa.doc_id = id_a
-         JOIN sizes sb ON sb.doc_id = id_b
-         WHERE i::DOUBLE / (sa.set_size + sb.set_size - i) >= 0.8
-         ORDER BY id_a, id_b""",
-    "dd_survivors" ->
-      s"""WITH sh AS ($ShingleSql),
-         sizes AS (SELECT doc_id, count(*) AS set_size FROM sh GROUP BY 1),
-         inter AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-           FROM sh a JOIN sh b
-             ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         dups AS (
-           SELECT DISTINCT id_b FROM inter
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE i::DOUBLE / (sa.set_size + sb.set_size - i) >= 0.8)
-         SELECT doc_id FROM documents
-         WHERE doc_id NOT IN (SELECT id_b FROM dups)
-         ORDER BY doc_id""",
-    "dd_clusters" ->
-      s"""WITH RECURSIVE $CcCtes
-         SELECT d.doc_id, coalesce(l.cluster, d.doc_id) AS cluster
-         FROM documents d LEFT JOIN labels l ON l.doc_id = d.doc_id
-         ORDER BY d.doc_id""",
-    "dd_survivors_exact" ->
-      s"""WITH RECURSIVE $CcCtes
-         SELECT doc_id FROM documents
-         WHERE doc_id NOT IN
-           (SELECT doc_id FROM labels WHERE doc_id != cluster)
-         ORDER BY doc_id""",
-    "dd_survivors_best" ->
-      s"""WITH RECURSIVE $CcCtes
-         SELECT doc_id FROM (
-           SELECT d.doc_id,
-             row_number() OVER (
-               PARTITION BY coalesce(l.cluster, d.doc_id)
-               ORDER BY length(d.text) DESC, d.doc_id) AS rn
-           FROM documents d LEFT JOIN labels l ON l.doc_id = d.doc_id)
-         WHERE rn = 1 ORDER BY doc_id""",
-    "dd_contam" ->
-      s"""WITH sh AS ($ShingleSql),
-         cs AS (SELECT doc_id AS corpus_id, shingle FROM sh
-                WHERE doc_id >= 50),
-         bs AS (SELECT doc_id AS bench_id, shingle FROM sh
-                WHERE doc_id < 50),
-         bsz AS (SELECT bench_id, count(*) AS bench_size FROM bs
-                 GROUP BY 1),
-         inter AS (SELECT cs.corpus_id, bs.bench_id, count(*) AS shared
-                   FROM cs JOIN bs ON cs.shingle = bs.shingle
-                   GROUP BY 1, 2)
-         SELECT corpus_id, bench_id,
-           round(shared::DOUBLE / bench_size, 4) AS containment
-         FROM inter JOIN bsz USING (bench_id)
-         WHERE shared::DOUBLE / bench_size >= 0.8
-         ORDER BY corpus_id, bench_id""",
-    "txt_repetition" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+')
-             AS tk FROM documents),
-         g3 AS (SELECT doc_id, list_filter(list_transform(
-                  range(1, greatest(len(tk)-2, 1)+1),
-                  i -> array_to_string(tk[i:i+2], ' ')),
-                  g -> len(g) > 0) AS g
-                FROM t),
-         d3 AS (SELECT doc_id, CASE WHEN len(g) = 0 THEN 0.0
-                  ELSE 1.0 - len(list_distinct(g))::DOUBLE / len(g) END
-                  AS dup3 FROM g3),
-         g2 AS (SELECT doc_id, unnest(list_filter(list_transform(
-                  range(1, greatest(len(tk)-1, 1)+1),
-                  i -> array_to_string(tk[i:i+1], ' ')),
-                  g -> len(g) > 0)) AS bg
-                FROM t),
-         bc AS (SELECT doc_id, bg, count(*) AS c FROM g2 GROUP BY 1, 2),
-         t2 AS (SELECT doc_id, max(c)::DOUBLE / sum(c) AS top2 FROM bc
-                GROUP BY 1)
-         SELECT d3.doc_id,
-           floor(dup3 * 10000 + 0.5) / 10000 AS dup3_frac,
-           floor(coalesce(top2, 0.0) * 10000 + 0.5) / 10000 AS top2_frac,
-           (floor(dup3 * 10000 + 0.5) / 10000 <= 0.05 AND
-            floor(coalesce(top2, 0.0) * 10000 + 0.5) / 10000 <= 0.07)
-             AS keep
-         FROM d3 LEFT JOIN t2 ON t2.doc_id = d3.doc_id
-         ORDER BY d3.doc_id""",
-    "txt_hash_topk" ->
-      """WITH tok AS (SELECT doc_id,
-             unnest(string_split_regex(trim(text), '\s+')) AS t
-           FROM documents),
-         cnt AS (SELECT doc_id,
-                   (('0x' || substr(md5('hf:' || t),1,8))::BIGINT % 64)
-                     AS b,
-                   count(*)::DOUBLE AS c
-                 FROM tok GROUP BY 1, 2),
-         ids AS (SELECT DISTINCT doc_id FROM cnt),
-         fv AS (SELECT ids.doc_id,
-                  list(coalesce(cnt.c, 0.0) ORDER BY i.i) AS v
-                FROM ids CROSS JOIN range(0, 64) i(i)
-                LEFT JOIN cnt ON cnt.doc_id = ids.doc_id AND cnt.b = i.i
-                GROUP BY ids.doc_id),
-         scored AS (SELECT q.doc_id AS query_id, c.doc_id AS neighbor_id,
-                      list_cosine_similarity(q.v, c.v) AS cos
-                    FROM fv q JOIN fv c ON c.doc_id != q.doc_id
-                    WHERE q.doc_id < 8),
-         ranked AS (SELECT query_id, neighbor_id, cos,
-                      row_number() OVER (PARTITION BY query_id
-                        ORDER BY cos DESC, neighbor_id ASC) AS rn
-                    FROM scored)
-         SELECT query_id, neighbor_id, round(cos, 4) AS cosine
-         FROM ranked WHERE rn <= 3 ORDER BY query_id, neighbor_id""",
-    "dd_spans" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk
-           FROM documents),
-         grams AS (
-           SELECT doc_id, i.i AS pos,
-             md5(array_to_string(tk[(i.i + 1):(i.i + 8)], ' ')) AS g
-           FROM toks
-           CROSS JOIN unnest(range(0, greatest(0, len(tk) - 8 + 1))) AS i(i)),
-         rep AS (
-           SELECT g FROM grams GROUP BY g
-           HAVING count(DISTINCT doc_id) >= 2),
-         hits AS (SELECT doc_id, pos FROM grams JOIN rep USING (g)),
-         isl AS (
-           SELECT doc_id, pos,
-             pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos)
-               AS grp
-           FROM hits)
-         SELECT doc_id, min(pos)::BIGINT AS span_start,
-           (max(pos) + 8 - 1)::BIGINT AS span_end,
-           count(*)::BIGINT AS n_grams
-         FROM isl GROUP BY doc_id, grp
-         ORDER BY doc_id, span_start""",
-    "dd_spans_cut" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk
-           FROM documents),
-         grams AS (
-           SELECT doc_id, i.i AS pos,
-             md5(array_to_string(tk[(i.i + 1):(i.i + 8)], ' ')) AS g
-           FROM toks
-           CROSS JOIN unnest(range(0, greatest(0, len(tk) - 8 + 1))) AS i(i)),
-         rep AS (
-           SELECT g FROM grams GROUP BY g
-           HAVING count(DISTINCT doc_id) >= 2),
-         hits AS (SELECT doc_id, pos FROM grams JOIN rep USING (g)),
-         isl AS (
-           SELECT doc_id, pos,
-             pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos)
-               AS grp
-           FROM hits),
-         sp AS (
-           SELECT doc_id, min(pos) AS span_start, max(pos) + 8 - 1 AS span_end
-           FROM isl GROUP BY doc_id, grp),
-         kept AS (
-           SELECT t.doc_id, i.i AS pos, t.tk[i.i + 1] AS tok
-           FROM toks t
-           CROSS JOIN unnest(range(0, len(t.tk))) AS i(i)
-           WHERE NOT EXISTS (SELECT 1 FROM sp
-             WHERE sp.doc_id = t.doc_id
-               AND i.i BETWEEN sp.span_start AND sp.span_end)),
-         rebuilt AS (
-           SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS text
-           FROM kept GROUP BY doc_id)
-         SELECT d.doc_id, coalesce(r.text, '') AS text
-         FROM documents d LEFT JOIN rebuilt r USING (doc_id)
-         ORDER BY d.doc_id""",
-    "dd_spans_keep1" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk
-           FROM documents),
-         grams AS (
-           SELECT doc_id, i.i AS pos,
-             md5(array_to_string(tk[(i.i + 1):(i.i + 8)], ' ')) AS g
-           FROM toks
-           CROSS JOIN unnest(range(0, greatest(0, len(tk) - 8 + 1))) AS i(i)),
-         rep AS (
-           SELECT g FROM grams GROUP BY g
-           HAVING count(DISTINCT doc_id) >= 2),
-         hits AS (SELECT doc_id, pos FROM grams JOIN rep USING (g)),
-         isl AS (
-           SELECT doc_id, pos,
-             pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos)
-               AS grp
-           FROM hits),
-         sp AS (
-           SELECT doc_id, min(pos) AS span_start, max(pos) + 8 - 1 AS span_end
-           FROM isl GROUP BY doc_id, grp),
-         spt AS (
-           SELECT sp.doc_id, sp.span_start, sp.span_end,
-             array_to_string(t.tk[(sp.span_start + 1):(sp.span_end + 1)], ' ')
-               AS passage
-           FROM sp JOIN toks t USING (doc_id)),
-         cut AS (
-           SELECT doc_id, span_start, span_end FROM (
-             SELECT doc_id, span_start, span_end,
-               row_number() OVER (PARTITION BY passage
-                 ORDER BY doc_id, span_start) AS rn
-             FROM spt)
-           WHERE rn > 1),
-         kept AS (
-           SELECT t.doc_id, i.i AS pos, t.tk[i.i + 1] AS tok
-           FROM toks t
-           CROSS JOIN unnest(range(0, len(t.tk))) AS i(i)
-           WHERE NOT EXISTS (SELECT 1 FROM cut
-             WHERE cut.doc_id = t.doc_id
-               AND i.i BETWEEN cut.span_start AND cut.span_end)),
-         rebuilt AS (
-           SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS text
-           FROM kept GROUP BY doc_id)
-         SELECT d.doc_id, coalesce(r.text, '') AS text
-         FROM documents d LEFT JOIN rebuilt r USING (doc_id)
-         ORDER BY d.doc_id""",
-    "ds_mix" ->
-      """SELECT doc_id, lang FROM documents
-         WHERE (('0x' || substr(md5('mix:' || doc_id::VARCHAR),1,8))
-                  ::BIGINT % 1000000)
-           < CASE lang WHEN 'en' THEN 1.0 WHEN 'zh' THEN 0.5
-                       WHEN 'de' THEN 0.25 ELSE 0.1 END * 1000000
-         ORDER BY doc_id""",
-    "ds_jsonl" ->
-      """SELECT lang, count(*)::BIGINT AS n,
-           CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-           CAST(sum(length(text)) AS BIGINT) AS sum_text_len
-         FROM documents GROUP BY lang ORDER BY lang""",
-    "ds_upsert" ->
-      """WITH batch AS (
-           SELECT doc_id, text || ' [rev2]' AS text,
-             length(text || ' [rev2]')::BIGINT AS n_chars
-           FROM documents WHERE doc_id % 10 = 0),
-         merged AS (
-           SELECT doc_id, text, n_chars FROM documents
-           WHERE doc_id % 10 <> 0
-           UNION ALL SELECT doc_id, text, n_chars FROM batch)
-         SELECT doc_id, n_chars, md5(text) AS content_hash
-         FROM merged ORDER BY doc_id""",
-    "ds_evolve" ->
-      """WITH v1 AS (SELECT doc_id, text, lang FROM documents
-                     WHERE doc_id % 2 = 0),
-         v2 AS (SELECT doc_id, text, lang, source, n_chars
-                FROM documents WHERE doc_id % 2 = 1),
-         merged AS (
-           SELECT doc_id, text, lang, NULL AS source, NULL AS n_chars
-           FROM v1
-           UNION ALL
-           SELECT doc_id, text, lang, source, n_chars FROM v2)
-         SELECT lang, count(*)::BIGINT AS n,
-           count(source)::BIGINT AS n_v2,
-           CAST(sum(n_chars) AS BIGINT) AS sum_chars_v2,
-           CAST(sum(length(text)) AS BIGINT) AS sum_text_len
-         FROM merged GROUP BY lang ORDER BY lang""",
-    "ds_cap_source" ->
-      s"""WITH $QualityBaseCtes,
-         qual AS (SELECT doc_id, $QualityExprSql AS quality FROM base),
-         ranked AS (SELECT d.doc_id, d.source, q.quality,
-             row_number() OVER (PARTITION BY d.source
-               ORDER BY q.quality DESC, d.doc_id ASC) AS rn
-           FROM documents d JOIN qual q USING (doc_id))
-         SELECT doc_id, source, quality FROM ranked
-         WHERE rn <= 15 ORDER BY doc_id""",
-    "ds_gate_quantile" ->
-      s"""WITH $QualityBaseCtes,
-         qual AS (SELECT doc_id, $QualityExprSql AS quality FROM base),
-         ranked AS (SELECT d.doc_id, d.lang,
-             percent_rank() OVER (PARTITION BY d.lang
-               ORDER BY q.quality ASC, d.doc_id ASC) AS pr
-           FROM documents d JOIN qual q USING (doc_id))
-         SELECT doc_id, lang FROM ranked
-         WHERE pr >= 0.25 ORDER BY doc_id""",
-    "ds_token_budget" ->
-      s"""WITH $QualityBaseCtes,
-         qual AS (SELECT doc_id, $QualityExprSql AS quality FROM base),
-         ranked AS (SELECT d.doc_id, d.lang, d.n_chars,
-             coalesce(sum(d.n_chars) OVER (PARTITION BY d.lang
-               ORDER BY q.quality DESC, d.doc_id ASC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-               0)::BIGINT AS spent
-           FROM documents d JOIN qual q USING (doc_id))
-         SELECT doc_id, lang, n_chars FROM ranked
-         WHERE spent < 20000 ORDER BY doc_id""",
-    "sim_mmr" -> mmrOracleSql(k = 4, topN = 12, lambda = 0.7),
-    "sim_mmr8" -> mmrOracleSql(k = 8, topN = 12, lambda = 0.7,
-      nQueries = 4),
-    "sim_kmeans" -> kmeansOracleSql(k = 4, iters = 2),
-    "sim_kmeans_sampled" -> kmeansOracleSql(k = 4, iters = 2,
-      sampleN = Some(32)),
-    "dd_semantic" -> semanticOracleSql(k = 4, iters = 2, threshold = 0.4),
-    "sim_topk_ivf" ->
-      s"""WITH ${ivfCtes(nProbe = 3)}
-         SELECT query_id, neighbor_id, round(cos, 4) AS cosine
-         FROM ivf_ranked WHERE rn <= 5 ORDER BY query_id, neighbor_id""",
-    "sim_recall_ivf" ->
-      s"""WITH ${ivfCtes(nProbe = 3)},
-         ivf AS (SELECT query_id, neighbor_id FROM ivf_ranked WHERE rn <= 5),
-         b_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                        list_cosine_similarity(q.e, c.e) AS cos
-                      FROM emb q JOIN emb c ON c.vec_id != q.vec_id
-                      WHERE q.vec_id < 8),
-         b_ranked AS (SELECT query_id, neighbor_id,
-                        row_number() OVER (PARTITION BY query_id
-                          ORDER BY cos DESC, neighbor_id ASC) AS rn
-                      FROM b_scored),
-         brute AS (SELECT query_id, neighbor_id FROM b_ranked WHERE rn <= 5)
-         SELECT b.query_id, count(*) AS k,
-           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_hit,
-           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
-             END)::DOUBLE / count(*), 4) AS recall
-         FROM brute b LEFT JOIN ivf l
-           ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         GROUP BY b.query_id ORDER BY b.query_id""",
-    "sim_recall_sweep" ->
-      s"""WITH $ivfBaseCtes,
-         sweep AS (SELECT unnest([1, 2, 4]) AS n_probe),
-         cand AS (SELECT DISTINCT s.n_probe, p.query_id,
-                    a.vec_id AS neighbor_id
-                  FROM sweep s JOIN probes_ranked p ON p.rn <= s.n_probe
-                  JOIN assign a ON a.cid = p.cid
-                  WHERE a.vec_id != p.query_id),
-         sc AS (SELECT n_probe, query_id, neighbor_id,
-                  list_cosine_similarity(eq.e, ec.e) AS cos
-                FROM cand JOIN emb eq ON eq.vec_id = cand.query_id
-                          JOIN emb ec ON ec.vec_id = cand.neighbor_id),
-         rk AS (SELECT n_probe, query_id, neighbor_id,
-                  row_number() OVER (PARTITION BY n_probe, query_id
-                    ORDER BY cos DESC, neighbor_id ASC) AS rn
-                FROM sc),
-         ivf AS (SELECT n_probe, query_id, neighbor_id FROM rk
-                 WHERE rn <= 5),
-         b_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                        list_cosine_similarity(q.e, c.e) AS cos
-                      FROM emb q JOIN emb c ON c.vec_id != q.vec_id
-                      WHERE q.vec_id < 8),
-         b_ranked AS (SELECT query_id, neighbor_id,
-                        row_number() OVER (PARTITION BY query_id
-                          ORDER BY cos DESC, neighbor_id ASC) AS rn
-                      FROM b_scored),
-         brute AS (SELECT query_id, neighbor_id FROM b_ranked WHERE rn <= 5)
-         SELECT s.n_probe::BIGINT AS n_probe, count(*)::BIGINT AS k,
-           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_hit,
-           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
-             END)::DOUBLE / count(*), 4) AS recall
-         FROM sweep s CROSS JOIN brute b
-         LEFT JOIN ivf l ON l.n_probe = s.n_probe
-           AND l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         GROUP BY s.n_probe ORDER BY n_probe""",
-    // the IVF-PQ sweep reuses the full-pair PQ replay (pscored — the
-    // sim_topk_pq oracle's scoring CTE, no injected cand) and slices it
-    // per probe level: candidates from probes_ranked at rn <= n_probe,
-    // then the floor-4dp ADC rank WITHIN each (n_probe, query) slice —
-    // exactly ivfPqTopK's restrict-then-rank order
-    "sim_recall_sweep_ivfpq" ->
-      s"""WITH $ivfBaseCtes,
-         ${pqCtes(PqM, PqKsub, PqIters, emitEmb = false)},
-         sweep AS (SELECT unnest([1, 2, 4]) AS n_probe),
-         pcand AS (SELECT DISTINCT s.n_probe, p.query_id,
-                     a.vec_id AS neighbor_id
-                   FROM sweep s JOIN probes_ranked p ON p.rn <= s.n_probe
-                   JOIN assign a ON a.cid = p.cid
-                   WHERE a.vec_id != p.query_id),
-         psel AS (SELECT c.n_probe, sc.query_id, sc.neighbor_id, sc.cosine
-                  FROM pcand c JOIN pscored sc
-                    ON sc.query_id = c.query_id
-                    AND sc.neighbor_id = c.neighbor_id),
-         prk AS (SELECT n_probe, query_id, neighbor_id,
-                   row_number() OVER (PARTITION BY n_probe, query_id
-                     ORDER BY cosine DESC, neighbor_id ASC) AS rn
-                 FROM psel),
-         ipq AS (SELECT n_probe, query_id, neighbor_id FROM prk
-                 WHERE rn <= 5),
-         b_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                        list_cosine_similarity(q.e, c.e) AS cos
-                      FROM emb q JOIN emb c ON c.vec_id != q.vec_id
-                      WHERE q.vec_id < 8),
-         b_ranked AS (SELECT query_id, neighbor_id,
-                        row_number() OVER (PARTITION BY query_id
-                          ORDER BY cos DESC, neighbor_id ASC) AS rn
-                      FROM b_scored),
-         brute AS (SELECT query_id, neighbor_id FROM b_ranked WHERE rn <= 5)
-         SELECT s.n_probe::BIGINT AS n_probe, count(*)::BIGINT AS k,
-           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_hit,
-           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
-             END)::DOUBLE / count(*), 4) AS recall
-         FROM sweep s CROSS JOIN brute b
-         LEFT JOIN ipq l ON l.n_probe = s.n_probe
-           AND l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         GROUP BY s.n_probe ORDER BY n_probe""",
-    "dd_minhash_pairs" ->
-      minhashOracleSql(numHashes = 64, bands = 16, seed = 42L,
-        threshold = 0.7),
-    "dd_incremental" ->
-      incrementalOracleSql(numHashes = 64, bands = 16, seed = 42L,
-        threshold = 0.8),
-    // the index path is semantics-preserving by design: same oracle
-    "dd_incremental_idx" ->
-      incrementalOracleSql(numHashes = 64, bands = 16, seed = 42L,
-        threshold = 0.8),
-    "dd_simhash_pairs" -> simhashOracleSql(maxHamming = 3),
-    "dd_embed_lsh" ->
-      embedLshOracleSql(tables = 8, bits = 8, threshold = 0.3),
-    "sim_topk_lsh" ->
-      s"""WITH ${lshTopKCtes(tables = 8, targetBucket = 32, k = 5)}
-         SELECT query_id, neighbor_id, round(cos, 4) AS cosine
-         FROM lsh_ranked WHERE rn <= 5 ORDER BY query_id, neighbor_id""",
-    "sim_recall" ->
-      s"""WITH ${lshTopKCtes(tables = 8, targetBucket = 32, k = 5)},
-         lsh AS (SELECT query_id, neighbor_id FROM lsh_ranked WHERE rn <= 5),
-         b_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                        list_cosine_similarity(q.e, c.e) AS cos
-                      FROM emb q JOIN emb c ON c.vec_id != q.vec_id),
-         b_ranked AS (SELECT query_id, neighbor_id,
-                        row_number() OVER (PARTITION BY query_id
-                          ORDER BY cos DESC, neighbor_id ASC) AS rn
-                      FROM b_scored),
-         brute AS (SELECT query_id, neighbor_id FROM b_ranked WHERE rn <= 5)
-         SELECT b.query_id % 32 AS band, count(*) AS k,
-           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_hit,
-           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
-             END)::DOUBLE / count(*), 4) AS recall
-         FROM brute b LEFT JOIN lsh l
-           ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         GROUP BY b.query_id % 32 ORDER BY band""",
-    "txt_chunks" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+')
-             AS tk FROM documents WHERE doc_id < 20),
-         st AS (SELECT doc_id, tk,
-                  range(0, greatest(len(tk)-1, 0)+1, 48) AS starts FROM t),
-         ch AS (SELECT doc_id, i.i AS chunk_idx,
-                  tk[starts[i.i+1]+1 : starts[i.i+1]+64] AS ctoks
-                FROM st CROSS JOIN unnest(range(0, 1000)) AS i(i)
-                WHERE i.i < len(starts))
-         SELECT doc_id, chunk_idx::INT AS chunk_idx,
-           len(ctoks)::BIGINT AS chunk_tokens,
-           array_to_string(ctoks, ' ') AS chunk_text
-         FROM ch ORDER BY doc_id, chunk_idx""",
-    "ds_split" ->
-      """SELECT doc_id, bucket,
-           CASE WHEN bucket < 90 THEN 'train'
-                WHEN bucket < 95 THEN 'val' ELSE 'test' END AS split
-         FROM (SELECT doc_id,
-                 (('0x' || substr(md5('split:' || doc_id::VARCHAR),1,8))
-                   ::BIGINT % 100) AS bucket
-               FROM documents)
-         ORDER BY doc_id""",
-    "ds_shuffle" ->
-      """SELECT doc_id,
-           row_number() OVER (
-             ORDER BY md5('shuffle:' || doc_id::VARCHAR) ASC, doc_id ASC
-           )::BIGINT AS shuffle_pos
-         FROM documents ORDER BY doc_id""",
-    "ds_group_sample" ->
-      """SELECT doc_id, lang FROM (
-           SELECT doc_id, lang,
-             row_number() OVER (PARTITION BY lang
-               ORDER BY md5('sample:' || doc_id::VARCHAR) ASC, doc_id ASC)
-               AS rn
-           FROM documents)
-         WHERE rn <= 3 ORDER BY lang, doc_id""",
-    "ds_pack" ->
-      """WITH d AS (SELECT doc_id,
-             len(string_split_regex(trim(text), '\s+'))::BIGINT AS n_tokens,
-             (('0x' || substr(md5('pack:' || doc_id::VARCHAR),1,8))
-               ::BIGINT % 8) AS shard
-           FROM documents)
-         SELECT doc_id, shard, n_tokens,
-           floor(coalesce(sum(n_tokens) OVER (PARTITION BY shard
-             ORDER BY doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             / 512)::BIGINT AS bin
-         FROM d ORDER BY doc_id""",
-    // the curation decision table composes the per-stage oracles above
-    // (txt_quality, txt_langid, dd_exact, dd_survivors, dd_contam,
-    // ds_split) into one sequential-gate pipeline; each stage's formula
-    // is byte-identical to its standalone oracle, re-scoped to the docs
-    // that survived the previous gate
-    "ds_curate" ->
-      (curateDecisionCtes + """
-         SELECT doc_id, quality, lang_pred, q_ok, lang_ok, exact_dup,
-           near_dup, contaminated, kept, bucket,
-           CASE WHEN kept = 1 THEN
-             (CASE WHEN bucket < 90 THEN 'train'
-                   WHEN bucket < 95 THEN 'val' ELSE 'test' END) END AS split
-         FROM dec2 ORDER BY doc_id"""),
-    // curation + per-domain cap: the decision chain's survivors joined
-    // back for source, then the same (quality desc, id) row_number cut
-    // the ds_cap_source oracle uses — dec2 already carries the quality
-    // the cap ranks on, so the two stages can't disagree about scores
-    "ds_curate_capped" ->
-      (curateDecisionCtes + """,
-         survivors AS (
-           SELECT d.doc_id, doc.source, d.quality,
-             CASE WHEN d.bucket < 90 THEN 'train'
-                  WHEN d.bucket < 95 THEN 'val' ELSE 'test' END AS split
-           FROM dec2 d JOIN documents doc ON doc.doc_id = d.doc_id
-           WHERE d.kept = 1),
-         capped AS (
-           SELECT *, row_number() OVER (PARTITION BY source
-               ORDER BY quality DESC, doc_id ASC) AS rn
-           FROM survivors)
-         SELECT doc_id, source, quality, split FROM capped
-         WHERE rn <= 10 ORDER BY doc_id"""),
-    // the STAGED curation artifact: what the restartable form writes as
-    // its final stage parquet — the kept docs with their split
-    // assignment. Same CTE chain; the certification here is that the
-    // parquet files a 100 TB run would audit hold exactly the decision
-    // table's kept set
-    "ds_curate_staged" ->
-      (curateDecisionCtes + """
-         SELECT dec2.doc_id, c.text, bucket,
-           CASE WHEN bucket < 90 THEN 'train'
-                WHEN bucket < 95 THEN 'val' ELSE 'test' END AS split
-         FROM dec2 JOIN corpus c ON dec2.doc_id = c.doc_id
-         WHERE kept = 1 ORDER BY dec2.doc_id"""),
-    // the batch collapse of streaming ingest: quality+lang gates over
-    // the non-landed docs, keep-first (lowest doc_id — arrival order is
-    // doc_id-derived) per content hash, anti-probe against the landed
-    // hashes, token accounting. Quality/lang expressions are the
-    // curateDecisionCtes twins over the drop relation.
-    "ds_ingest" ->
-      """WITH landed AS (SELECT DISTINCT md5(text) AS content_hash
-             FROM documents WHERE doc_id % 5 = 0),
-         dm AS (SELECT doc_id, text,
-                  string_split_regex(trim(text), '\s+') AS toks,
-                  length(text) AS len
-                FROM documents WHERE doc_id % 5 != 0),
-         qual AS (
-           SELECT doc_id,
-             floor(((CASE WHEN len(toks) BETWEEN 10 AND 10000
-                 THEN 1.0 ELSE 0.3 END) * 0.4
-               + least(round(len(list_filter(toks, x -> list_contains(
-                   ['the','a','an','and','or','of','to','in','is','it','that',
-                    'for','on','with','as','at','by','this'], lower(x))))::DOUBLE /
-                 greatest(len(toks), 1), 4) * 5.0, 1.0) * 0.3
-               + round(len(regexp_extract_all(text, '[A-Za-z]'))::DOUBLE /
-                 greatest(len, 1), 4) * 0.3) * 10000 + 0.5) / 10000 AS quality
-           FROM dm),
-         lt AS (SELECT doc_id,
-                  string_split_regex(trim(lower(text)), '\s+') AS ltoks
-                FROM dm),
-         ls AS (
-           SELECT doc_id,
-             len(list_filter(ltoks, x -> list_contains(
-               ['der','die','das','und','ist','nicht','mit','ein'], x)))::DOUBLE
-               / greatest(len(ltoks), 1) AS s_de,
-             len(list_filter(ltoks, x -> list_contains(
-               ['the','and','of','to','in','is','that','with'], x)))::DOUBLE
-               / greatest(len(ltoks), 1) AS s_en,
-             len(list_filter(ltoks, x -> list_contains(
-               ['el','la','los','y','es','no','con','una'], x)))::DOUBLE
-               / greatest(len(ltoks), 1) AS s_es,
-             len(list_filter(ltoks, x -> list_contains(
-               ['le','la','les','et','est','pas','avec','une'], x)))::DOUBLE
-               / greatest(len(ltoks), 1) AS s_fr,
-             len(list_filter(ltoks, x -> list_contains(
-               ['的','是','不','了','在','和','有','我'], x)))::DOUBLE
-               / greatest(len(ltoks), 1) AS s_zh
-           FROM lt),
-         lang AS (
-           SELECT doc_id,
-             CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
-                  WHEN s_de >= greatest(s_en, s_es, s_fr, s_zh) THEN 'de'
-                  WHEN s_en >= greatest(s_es, s_fr, s_zh) THEN 'en'
-                  WHEN s_es >= greatest(s_fr, s_zh) THEN 'es'
-                  WHEN s_fr >= s_zh THEN 'fr'
-                  ELSE 'zh' END AS lang_pred
-           FROM ls),
-         gated AS (
-           SELECT m.doc_id, m.text, md5(m.text) AS content_hash
-           FROM dm m JOIN qual q USING (doc_id) JOIN lang l USING (doc_id)
-           WHERE q.quality >= 0.5 AND l.lang_pred = 'en'),
-         kept AS (
-           SELECT doc_id, text, content_hash FROM (
-             SELECT *, row_number() OVER (PARTITION BY content_hash
-                 ORDER BY doc_id ASC) AS rn
-             FROM gated) WHERE rn = 1),
-         fresh AS (
-           SELECT k.doc_id, k.text, k.content_hash
-           FROM kept k LEFT JOIN landed l ON l.content_hash = k.content_hash
-           WHERE l.content_hash IS NULL)
-         SELECT doc_id, content_hash,
-           len(string_split_regex(trim(text), '\s+'))::BIGINT AS n_tokens,
-           greatest(
-             len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')),
-             ceil(length(text) / 4)::INT)::BIGINT AS n_tokens_est
-         FROM fresh ORDER BY doc_id""",
-    "mm_audio" ->
-      """SELECT doc_id,
-           8000 AS sample_rate,
-           (1 + doc_id % 2)::INT AS channels,
-           (64 + n_chars % 128)::INT AS n_frames,
-           ((64 + n_chars % 128) * 1000 // 8000)::BIGINT AS duration_ms,
-           ((doc_id * 31) % 20000 + 1000)::INT AS amp_1,
-           (CASE WHEN doc_id % 2 = 1
-              THEN (doc_id * 31 + 17) % 20000 + 1000 ELSE -1 END)::INT
-             AS amp_2
-         FROM documents ORDER BY doc_id""",
-    // sampled indices are range(0, n, 2) — the stride-2 frame sample;
-    // per-channel sums over those indices are exact ints in both engines
-    "mm_video" ->
-      """SELECT doc_id,
-           (4 + doc_id % 8)::INT AS width,
-           (4 + n_chars % 8)::INT AS height,
-           25 AS fps,
-           (3 + n_chars % 6)::INT AS n_frames,
-           ((3 + n_chars % 6 + 1) // 2)::INT AS n_sampled,
-           list_sum(list_transform(range(0, (3 + n_chars % 6)::INT, 2),
-             i -> (doc_id * 7 + i * 13) % 256))::INT AS sum_r,
-           list_sum(list_transform(range(0, (3 + n_chars % 6)::INT, 2),
-             i -> (doc_id * 11 + i * 29) % 256))::INT AS sum_g,
-           list_sum(list_transform(range(0, (3 + n_chars % 6)::INT, 2),
-             i -> (doc_id * 3 + i * 41 + 5) % 256))::INT AS sum_b
-         FROM documents ORDER BY doc_id""",
-    "mm_features" ->
-      """SELECT doc_id,
-           (8 + doc_id % 32)::INT AS width,
-           (8 + n_chars % 32)::INT AS height,
-           1 AS n_frames,
-           (doc_id % 256)::INT AS mean_r,
-           (doc_id * 7 % 256)::INT AS mean_g,
-           ((doc_id * 13 + 5) % 256)::INT AS mean_b
-         FROM documents ORDER BY doc_id""",
-    "dd_embed_pairs" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)
-         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round(list_cosine_similarity(a.e, b.e), 4) AS cosine
-         FROM v a JOIN v b ON a.vec_id < b.vec_id
-         WHERE list_cosine_similarity(a.e, b.e) >= 0.45
-         ORDER BY id_a, id_b""",
-    "sim_topk_q8" ->
-      s"""WITH $Q8Ctes,
-         scored AS (
-           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             list_cosine_similarity(q.qv, c.qv) AS cos
-           FROM qv q JOIN qv c ON c.vec_id != q.vec_id),
-         ranked AS (
-           SELECT query_id, neighbor_id, cos,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY cos DESC, neighbor_id ASC) AS rn
-           FROM scored)
-         SELECT query_id, neighbor_id, round(cos, 4) AS cosine
-         FROM ranked WHERE rn <= 5 ORDER BY query_id, neighbor_id""",
-    "sim_recall_q8" ->
-      s"""WITH $Q8Ctes,
-         q8s AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   list_cosine_similarity(q.qv, c.qv) AS cos
-                 FROM qv q JOIN qv c ON c.vec_id != q.vec_id),
-         q8r AS (SELECT query_id, neighbor_id,
-                   row_number() OVER (PARTITION BY query_id
-                     ORDER BY cos DESC, neighbor_id ASC) AS rn
-                 FROM q8s),
-         q8 AS (SELECT query_id, neighbor_id FROM q8r WHERE rn <= 5),
-         bs AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                  list_cosine_similarity(q.e, c.e) AS cos
-                FROM emb q JOIN emb c ON c.vec_id != q.vec_id),
-         br AS (SELECT query_id, neighbor_id,
-                  row_number() OVER (PARTITION BY query_id
-                    ORDER BY cos DESC, neighbor_id ASC) AS rn
-                FROM bs),
-         brute AS (SELECT query_id, neighbor_id FROM br WHERE rn <= 5)
-         SELECT b.query_id % 32 AS band, count(*) AS k,
-           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_hit,
-           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
-             END)::DOUBLE / count(*), 4) AS recall
-         FROM brute b LEFT JOIN q8 l
-           ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         GROUP BY b.query_id % 32 ORDER BY band""",
-    "sim_topk_pq" ->
-      s"""WITH ${pqCtes(PqM, PqKsub, PqIters)}
-         SELECT query_id, neighbor_id, cosine
-         FROM pranked WHERE rn <= 5 ORDER BY query_id, neighbor_id""",
-    // identical oracle to sim_topk_pq on purpose: the Spark side's
-    // parquet round trip must be value-invisible
-    "sim_topk_pq_idx" ->
-      s"""WITH ${pqCtes(PqM, PqKsub, PqIters)}
-         SELECT query_id, neighbor_id, cosine
-         FROM pranked WHERE rn <= 5 ORDER BY query_id, neighbor_id""",
-    "sim_recall_pq" ->
-      s"""WITH ${pqCtes(PqM, PqKsub, PqIters)},
-         pq5 AS (SELECT query_id, neighbor_id FROM pranked WHERE rn <= 5),
-         bs AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                  list_cosine_similarity(q.e, c.e) AS cos
-                FROM emb q JOIN emb c ON c.vec_id != q.vec_id),
-         br AS (SELECT query_id, neighbor_id,
-                  row_number() OVER (PARTITION BY query_id
-                    ORDER BY cos DESC, neighbor_id ASC) AS rn
-                FROM bs),
-         brute AS (SELECT query_id, neighbor_id FROM br WHERE rn <= 5)
-         SELECT b.query_id % 32 AS band, count(*) AS k,
-           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_hit,
-           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
-             END)::DOUBLE / count(*), 4) AS recall
-         FROM brute b LEFT JOIN pq5 l
-           ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         GROUP BY b.query_id % 32 ORDER BY band""",
-    "sim_recall_pq_rerank" ->
-      s"""WITH ${pqCtes(PqM, PqKsub, PqIters)},
-         rcand AS (SELECT query_id, neighbor_id FROM pranked
-                   WHERE rn <= $PqShortlist),
-         rex AS (SELECT r.query_id, r.neighbor_id,
-                   list_cosine_similarity(qe.e, ce.e) AS cos
-                 FROM rcand r JOIN emb qe ON qe.vec_id = r.query_id
-                 JOIN emb ce ON ce.vec_id = r.neighbor_id),
-         rrank AS (SELECT query_id, neighbor_id,
-                     row_number() OVER (PARTITION BY query_id
-                       ORDER BY cos DESC, neighbor_id ASC) AS rn
-                   FROM rex),
-         pqr AS (SELECT query_id, neighbor_id FROM rrank WHERE rn <= 5),
-         bs AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                  list_cosine_similarity(q.e, c.e) AS cos
-                FROM emb q JOIN emb c ON c.vec_id != q.vec_id),
-         br AS (SELECT query_id, neighbor_id,
-                  row_number() OVER (PARTITION BY query_id
-                    ORDER BY cos DESC, neighbor_id ASC) AS rn
-                FROM bs),
-         brute AS (SELECT query_id, neighbor_id FROM br WHERE rn <= 5)
-         SELECT b.query_id % 32 AS band, count(*) AS k,
-           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_hit,
-           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
-             END)::DOUBLE / count(*), 4) AS recall
-         FROM brute b LEFT JOIN pqr l
-           ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         GROUP BY b.query_id % 32 ORDER BY band""",
-    "sim_topk_ivfpq" ->
-      s"""WITH $ivfBaseCtes,
-         probes AS (SELECT query_id, cid FROM probes_ranked
-                    WHERE rn <= 3),
-         ${pqCtes(PqM, PqKsub, PqIters, emitEmb = false, candCte = Some(
-           """cand AS (SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
-              FROM probes p JOIN assign a ON a.cid = p.cid
-              WHERE a.vec_id != p.query_id)"""))}
-         SELECT query_id, neighbor_id, cosine
-         FROM pranked WHERE rn <= 5 ORDER BY query_id, neighbor_id""",
-    "sim_topk_ivfpq_res" ->
-      s"""WITH $ivfBaseCtes,
-         ${residualIvfPqCtes(PqM, PqKsub, PqIters, nProbe = 3)}
-         SELECT query_id, neighbor_id, cosine
-         FROM rranked WHERE rn <= 5 ORDER BY query_id, neighbor_id""",
-    // the incremental-append row's oracle IS the from-scratch residual
-    // chain on the full corpus: base+appended codes matching it is the
-    // property the row certifies
-    "sim_topk_ivfpq_res_inc" ->
-      s"""WITH $ivfBaseCtes,
-         ${residualIvfPqCtes(PqM, PqKsub, PqIters, nProbe = 3)}
-         SELECT query_id, neighbor_id, cosine
-         FROM rranked WHERE rn <= 5 ORDER BY query_id, neighbor_id""",
-    // the deletion row's oracle IS the from-scratch residual chain on
-    // the full corpus with the candidate space restricted to the
-    // SURVIVING (even-id) neighbors before the top-5 cut: cents/books
-    // were trained on the full corpus and a delete never re-encodes,
-    // so survivors must score exactly as they did pre-delete
-    "sim_topk_ivfpq_res_del" ->
-      s"""WITH $ivfBaseCtes,
-         ${residualIvfPqCtes(PqM, PqKsub, PqIters, nProbe = 3)}
-         SELECT query_id, neighbor_id, cosine FROM (
-           SELECT query_id, neighbor_id, cosine,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, neighbor_id ASC) AS rn2
-           FROM rscored WHERE neighbor_id % 2 = 0)
-         WHERE rn2 <= 5 ORDER BY query_id, neighbor_id""",
-    "sim_recall_ivfpq_res_rerank" ->
-      s"""WITH $ivfBaseCtes,
-         ${residualIvfPqCtes(PqM, PqKsub, PqIters, nProbe = 3)},
-         rcand AS (SELECT query_id, neighbor_id FROM rranked
-                   WHERE rn <= $PqShortlist),
-         rex AS (SELECT r.query_id, r.neighbor_id,
-                   list_cosine_similarity(qe.e, ce.e) AS cos
-                 FROM rcand r JOIN emb qe ON qe.vec_id = r.query_id
-                 JOIN emb ce ON ce.vec_id = r.neighbor_id),
-         rrank2 AS (SELECT query_id, neighbor_id,
-                      row_number() OVER (PARTITION BY query_id
-                        ORDER BY cos DESC, neighbor_id ASC) AS rn
-                    FROM rex),
-         ipqr AS (SELECT query_id, neighbor_id FROM rrank2 WHERE rn <= 5),
-         bs AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                  list_cosine_similarity(q.e, c.e) AS cos
-                FROM emb q JOIN emb c ON c.vec_id != q.vec_id
-                WHERE q.vec_id < 8),
-         br AS (SELECT query_id, neighbor_id,
-                  row_number() OVER (PARTITION BY query_id
-                    ORDER BY cos DESC, neighbor_id ASC) AS rn
-                FROM bs),
-         brute AS (SELECT query_id, neighbor_id FROM br WHERE rn <= 5)
-         SELECT b.query_id AS band, count(*) AS k,
-           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_hit,
-           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
-             END)::DOUBLE / count(*), 4) AS recall
-         FROM brute b LEFT JOIN ipqr l
-           ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         GROUP BY b.query_id ORDER BY band""",
-    // the sweep runs the residual chain once at the MAX probe level (4
-    // — rscored is then a superset of every level's candidates, since
-    // a neighbor qualifies at level np iff its coarse cid ranks
-    // <= np for the query) and slices per level before the rank cut —
-    // ivfPqResidualTopK's restrict-then-rank order at each np
-    "sim_recall_sweep_ivfpq_res" ->
-      s"""WITH $ivfBaseCtes,
-         ${residualIvfPqCtes(PqM, PqKsub, PqIters, nProbe = 4)},
-         sweep AS (SELECT unnest([1, 2, 4]) AS n_probe),
-         rsel AS (SELECT s.n_probe, sc.query_id, sc.neighbor_id,
-                    sc.cosine
-                  FROM rscored sc
-                  JOIN remb rm ON rm.vec_id = sc.neighbor_id
-                  JOIN probes_ranked pr ON pr.query_id = sc.query_id
-                    AND pr.cid = rm.cid
-                  JOIN sweep s ON pr.rn <= s.n_probe),
-         rk2 AS (SELECT n_probe, query_id, neighbor_id,
-                   row_number() OVER (PARTITION BY n_probe, query_id
-                     ORDER BY cosine DESC, neighbor_id ASC) AS rn
-                 FROM rsel),
-         ipqres AS (SELECT n_probe, query_id, neighbor_id FROM rk2
-                    WHERE rn <= 5),
-         b_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                        list_cosine_similarity(q.e, c.e) AS cos
-                      FROM emb q JOIN emb c ON c.vec_id != q.vec_id
-                      WHERE q.vec_id < 8),
-         b_ranked AS (SELECT query_id, neighbor_id,
-                        row_number() OVER (PARTITION BY query_id
-                          ORDER BY cos DESC, neighbor_id ASC) AS rn
-                      FROM b_scored),
-         brute AS (SELECT query_id, neighbor_id FROM b_ranked WHERE rn <= 5)
-         SELECT s.n_probe::BIGINT AS n_probe, count(*)::BIGINT AS k,
-           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_hit,
-           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
-             END)::DOUBLE / count(*), 4) AS recall
-         FROM sweep s CROSS JOIN brute b
-         LEFT JOIN ipqres l ON l.n_probe = s.n_probe
-           AND l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         GROUP BY s.n_probe ORDER BY n_probe""",
-    "sim_topk" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         scored AS (
-           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             list_cosine_similarity(q.e, c.e) AS cos
-           FROM v q JOIN v c ON c.vec_id != q.vec_id),
-         ranked AS (
-           SELECT query_id, neighbor_id, cos,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY cos DESC, neighbor_id ASC) AS rn
-           FROM scored)
-         SELECT query_id, neighbor_id, round(cos, 4) AS cosine
-         FROM ranked WHERE rn <= 5 ORDER BY query_id, neighbor_id""",
-    "sim_centroids" ->
-      """SELECT label, count(*) AS n,
-           round(sum(embedding[1]::DOUBLE) / count(*), 6) AS c1,
-           round(sum(embedding[2]::DOUBLE) / count(*), 6) AS c2
-         FROM embeddings GROUP BY label ORDER BY label""",
-    "sk_cms" ->
-      """WITH tok AS (
-           SELECT unnest(string_split_regex(trim(text), '\s+')) AS term
-           FROM documents),
-         buckets AS (
-           SELECT term, d.d AS d,
-             ('0x' || substr(md5('cm:' || d.d::VARCHAR || ':' || term),1,8))
-               ::BIGINT % 64 AS bucket
-           FROM tok CROSS JOIN unnest(range(0,3)) AS d(d)),
-         sketch AS (
-           SELECT d, bucket, count(*)::BIGINT AS cnt
-           FROM buckets GROUP BY d, bucket),
-         exact AS (
-           SELECT term, count(*)::BIGINT AS exact FROM tok GROUP BY term),
-         probe AS (
-           SELECT e.term, d.d AS d,
-             ('0x' || substr(md5('cm:' || d.d::VARCHAR || ':' || e.term),1,8))
-               ::BIGINT % 64 AS bucket
-           FROM exact e CROSS JOIN unnest(range(0,3)) AS d(d)),
-         est AS (
-           SELECT p.term, min(coalesce(s.cnt, 0))::BIGINT AS est
-           FROM probe p LEFT JOIN sketch s USING (d, bucket)
-           GROUP BY p.term)
-         SELECT est.term, est, exact, (est - exact)::BIGINT AS overcount
-         FROM est JOIN exact USING (term) ORDER BY term""",
-    "sk_bloom" ->
-      """WITH mem AS (SELECT doc_id FROM documents WHERE doc_id < 100),
-         mpos AS (
-           SELECT ('0x' || substr(md5('bf:' || h.h::VARCHAR || ':'
-               || doc_id::VARCHAR),1,8))::BIGINT % 512 AS pos
-           FROM mem CROSS JOIN unnest(range(0,3)) AS h(h)),
-         filt AS (
-           SELECT pos // 32 AS word,
-             bit_or(1::BIGINT << (pos % 32)::INT) AS mask
-           FROM mpos GROUP BY word),
-         ppos AS (
-           SELECT doc_id,
-             ('0x' || substr(md5('bf:' || h.h::VARCHAR || ':'
-               || doc_id::VARCHAR),1,8))::BIGINT % 512 AS pos
-           FROM documents CROSS JOIN unnest(range(0,3)) AS h(h)),
-         hits AS (
-           SELECT doc_id,
-             (coalesce(f.mask, 0) & (1::BIGINT << (p.pos % 32)::INT)) <> 0
-               AS hit
-           FROM ppos p LEFT JOIN filt f ON f.word = p.pos // 32)
-         SELECT doc_id, bool_and(hit) AS might_contain,
-           doc_id < 100 AS in_set
-         FROM hits GROUP BY doc_id ORDER BY doc_id""",
-    "sk_hll" ->
-      """WITH keyed AS (
-           SELECT 'vocab' AS what,
-             unnest(string_split_regex(trim(text), '\s+')) AS k
-           FROM documents
-           UNION ALL
-           SELECT 'doc_ids' AS what, doc_id::VARCHAR AS k
-           FROM documents),
-         h AS (
-           SELECT what,
-             ('0x' || substr(md5('hl:r:' || k),1,8))::BIGINT % 512
-               AS register,
-             ('0x' || substr(md5('hl:w:' || k),1,8))::BIGINT AS w
-           FROM keyed),
-         r AS (
-           SELECT what, register,
-             max(CASE WHEN w = 0 THEN 33
-                      ELSE 33 - length(bin(w)) END) AS maxrho
-           FROM h GROUP BY what, register),
-         agg AS (
-           SELECT what, count(*) AS present,
-             coalesce(sum(1.0 / (1::BIGINT << maxrho)), 0.0) AS sp
-           FROM r GROUP BY what),
-         est AS (
-           SELECT what, (512 - present) AS v_zero,
-             sp + (512 - present) AS sum_inv,
-             CASE WHEN (0.7213 / (1 + 1.079/512)) * 512 * 512
-                         / (sp + (512 - present)) <= 2.5 * 512
-                       AND present < 512
-                  THEN 512 * ln(512.0 / (512 - present))
-                  ELSE (0.7213 / (1 + 1.079/512)) * 512 * 512
-                         / (sp + (512 - present)) END AS e
-           FROM agg),
-         x AS (SELECT what, count(DISTINCT k) AS exact_distinct
-               FROM keyed GROUP BY what)
-         SELECT est.what, 512::BIGINT AS m, v_zero::BIGINT AS v_zero,
-           round(sum_inv, 6) AS sum_inv, round(e, 2) AS est_hll,
-           exact_distinct::BIGINT AS exact_distinct,
-           round(abs(e - exact_distinct) / exact_distinct * 100, 2)
-             AS err_pct
-         FROM est JOIN x USING (what) ORDER BY what""",
-    // the 64-bit twin replayed from the md5 two-slice: hi/lo are the
-    // first/second 8 hex digits of md5('hl64:'||k); register = low 9
-    // bits of the 64-bit value (= lo % 512), rho = 65 - bitlength(h)
-    // capped at 56 (the w == 0 case). The present-register sum rides
-    // as the scaled integer sum(2^(56-maxrho)) (DuckDB sums BIGINT
-    // into HUGEINT — no overflow) and converts to double ONCE, exactly
-    // mirroring hllEstimate's decimal-sum -> double -> /2^56 chain, so
-    // sum_inv is the same double bit pattern in both engines
-    "sk_hll64" ->
-      """WITH keyed AS (
-           SELECT 'vocab' AS what,
-             unnest(string_split_regex(trim(text), '\s+')) AS k
-           FROM documents
-           UNION ALL
-           SELECT 'doc_ids' AS what, doc_id::VARCHAR AS k
-           FROM documents),
-         h AS (
-           SELECT what,
-             ('0x' || substr(md5('hl64:' || k),1,8))::BIGINT AS hi,
-             ('0x' || substr(md5('hl64:' || k),9,8))::BIGINT AS lo
-           FROM keyed WHERE k IS NOT NULL),
-         bl AS (
-           SELECT what, lo % 512 AS register,
-             CASE WHEN hi > 0 THEN 32 + length(bin(hi))
-                  WHEN lo > 0 THEN length(bin(lo)) ELSE 0 END AS bitlen
-           FROM h),
-         r AS (
-           SELECT what, register,
-             max(CASE WHEN bitlen > 9 THEN 65 - bitlen ELSE 56 END)
-               AS maxrho
-           FROM bl GROUP BY what, register),
-         agg AS (
-           SELECT what, count(*) AS present,
-             sum(1::BIGINT << (56 - maxrho))::DOUBLE
-               / 72057594037927936.0 AS sp
-           FROM r GROUP BY what),
-         est AS (
-           SELECT what, (512 - present) AS v_zero,
-             sp + (512 - present) AS sum_inv,
-             CASE WHEN (0.7213 / (1 + 1.079/512)) * 512 * 512
-                         / (sp + (512 - present)) <= 2.5 * 512
-                       AND present < 512
-                  THEN 512 * ln(512.0 / (512 - present))
-                  ELSE (0.7213 / (1 + 1.079/512)) * 512 * 512
-                         / (sp + (512 - present)) END AS e
-           FROM agg),
-         x AS (SELECT what, count(DISTINCT k) AS exact_distinct
-               FROM keyed GROUP BY what)
-         SELECT est.what, 512::BIGINT AS m, v_zero::BIGINT AS v_zero,
-           round(sum_inv, 6) AS sum_inv, round(e, 2) AS est_hll,
-           exact_distinct::BIGINT AS exact_distinct,
-           round(abs(e - exact_distinct) / exact_distinct * 100, 2)
-             AS err_pct
-         FROM est JOIN x USING (what) ORDER BY what""",
-    "sim_project" ->
-      """WITH pl AS (
-           SELECT jd.j AS j, list(jd.pv ORDER BY jd.d) AS plane
-           FROM (
-             SELECT j.j, d.d,
-               ((('0x' || substr(md5('rp:0:' || j.j::VARCHAR || ':'
-                   || d.d::VARCHAR),1,8))::BIGINT
-                 % 1000001 - 500000) / 500000.0) AS pv
-             FROM unnest(range(0,16)) AS j(j)
-             CROSS JOIN unnest(range(0,64)) AS d(d)) jd
-           GROUP BY jd.j),
-         emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         proj AS (
-           SELECT emb.vec_id, pl.j,
-             floor(list_dot_product(emb.e, pl.plane) * 0.25 * 10000 + 0.5)
-               / 10000 AS pv
-           FROM emb CROSS JOIN pl
-           WHERE emb.e IS NOT NULL)
-         SELECT vec_id, j::BIGINT AS j, pv AS value FROM proj
-         UNION ALL
-         -- posexplode_outer mirror: a NULL embedding is ONE
-         -- (vec_id, NULL, NULL) row, not 16 NULL-valued ones
-         SELECT vec_id, NULL::BIGINT AS j, NULL::DOUBLE AS value
-         FROM emb WHERE e IS NULL
-         ORDER BY vec_id, j""",
-    "txt_tokens" ->
-      """SELECT doc_id, length(text)::BIGINT AS n_chars,
-           len(string_split_regex(trim(text), '\s+'))::BIGINT AS n_tokens,
-           greatest(
-             len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')),
-             ceil(length(text) / 4)::INT)::BIGINT AS token_estimate
-         FROM documents ORDER BY doc_id""",
-    "txt_filter" ->
-      """WITH m AS (
-           SELECT doc_id, text,
-             string_split_regex(trim(text), '\s+') AS toks,
-             length(text) AS len
-           FROM documents),
-         base AS (
-           SELECT doc_id,
-             len(toks)::BIGINT AS n_tokens,
-             round(len(list_filter(toks, x -> list_contains(
-                 ['the','a','an','and','or','of','to','in','is','it','that',
-                  'for','on','with','as','at','by','this'], lower(x))))::DOUBLE /
-               greatest(len(toks), 1), 4) AS stopword_ratio,
-             round(len(regexp_extract_all(text, '[A-Za-z]'))::DOUBLE /
-               greatest(len, 1), 4) AS alpha_ratio,
-             (CASE WHEN len(toks) BETWEEN 10 AND 10000 THEN 1.0 ELSE 0.3 END)
-               AS length_ok
-           FROM m),
-         q AS (
-           SELECT doc_id, n_tokens,
-             floor((length_ok * 0.4 + least(stopword_ratio * 5.0, 1.0) * 0.3
-               + alpha_ratio * 0.3) * 10000 + 0.5) / 10000 AS quality
-           FROM base),
-         g3 AS (SELECT doc_id, list_filter(list_transform(
-                  range(1, greatest(len(toks)-2, 1)+1),
-                  i -> array_to_string(toks[i:i+2], ' ')),
-                  g -> len(g) > 0) AS g
-                FROM m),
-         d3 AS (SELECT doc_id,
-                  floor((CASE WHEN len(g) = 0 THEN 0.0
-                    ELSE 1.0 - len(list_distinct(g))::DOUBLE / len(g) END)
-                    * 10000 + 0.5) / 10000 AS dup3_frac
-                FROM g3)
-         SELECT q.doc_id, q.n_tokens, q.quality, d3.dup3_frac,
-           q.n_tokens < 20 AS too_short,
-           q.quality < 0.5 AS low_quality,
-           d3.dup3_frac > 0.05 AS too_repetitive,
-           NOT (q.n_tokens < 20 OR q.quality < 0.5 OR d3.dup3_frac > 0.05)
-             AS keep
-         FROM q JOIN d3 USING (doc_id) ORDER BY q.doc_id""",
-    "txt_redact" ->
-      """WITH d AS (
-           SELECT doc_id,
-             text || ' contact user' || doc_id::VARCHAR
-                  || '@mail.example.org'
-                  || ' or 555-867-' || lpad((doc_id % 10000)::VARCHAR, 4, '0')
-                  || ' from 10.0.' || (doc_id % 256)::VARCHAR
-                  || '.' || (doc_id % 100)::VARCHAR AS t
-           FROM documents),
-         s1 AS (SELECT doc_id, t,
-             regexp_replace(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-               '<EMAIL>', 'g') AS t1 FROM d),
-         s2 AS (SELECT doc_id, t, t1,
-             regexp_replace(t1, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b',
-               '<IP>', 'g') AS t2 FROM s1)
-         SELECT doc_id,
-           regexp_replace(t2, '\b\d{3}[-. ]\d{3}[-. ]\d{4}\b', '<PHONE>', 'g')
-             AS redacted,
-           len(regexp_extract_all(t,
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))::BIGINT
-             AS n_email,
-           len(regexp_extract_all(t1,
-             '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b'))::BIGINT AS n_ip,
-           len(regexp_extract_all(t2,
-             '\b\d{3}[-. ]\d{3}[-. ]\d{4}\b'))::BIGINT AS n_phone
-         FROM s2 ORDER BY doc_id""",
-    "txt_bm25" ->
-      """WITH dl AS (
-           SELECT doc_id AS doc,
-             len(string_split_regex(trim(text), '\s+'))::DOUBLE AS dl
-           FROM documents),
-         stats AS (
-           SELECT count(*)::DOUBLE AS n_docs, avg(dl) AS avgdl FROM dl),
-         post AS (
-           SELECT term, doc, count(*)::DOUBLE AS tf FROM (
-             SELECT doc_id AS doc,
-               unnest(string_split_regex(trim(text), '\s+')) AS term
-             FROM documents)
-           WHERE term IN ('spark', 'join', 'shuffle')
-           GROUP BY term, doc),
-         dfreq AS (
-           SELECT term, count(DISTINCT doc)::DOUBLE AS df
-           FROM post GROUP BY term),
-         scored AS (
-           SELECT p.doc, count(*)::BIGINT AS n_terms_hit,
-             sum(ln(1 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
-                 * p.tf * 2.2
-                 / (p.tf + 1.2 * (0.25 + 0.75 * d.dl / s.avgdl))) AS score
-           FROM post p
-           JOIN dfreq f USING (term)
-           JOIN dl d USING (doc)
-           CROSS JOIN stats s
-           GROUP BY p.doc)
-         SELECT doc AS doc_id, n_terms_hit,
-           floor(score * 10000 + 0.5) / 10000 AS score
-         FROM scored ORDER BY score DESC, doc_id LIMIT 10""",
-    "txt_quality" ->
-      s"""WITH $QualityBaseCtes
-         SELECT doc_id, n_tokens, mean_token_len, stopword_ratio, alpha_ratio,
-           $QualityExprSql AS quality
-         FROM base ORDER BY doc_id""",
-    "txt_divergence" ->
-      """WITH cut AS (SELECT (max(doc_id) + 1) // 2 AS c FROM documents),
-         tp AS (SELECT unnest(string_split_regex(trim(text), '\s+')) AS w
-                FROM documents, cut WHERE doc_id < cut.c),
-         tq AS (SELECT unnest(string_split_regex(trim(text), '\s+')) AS w
-                FROM documents, cut WHERE doc_id >= cut.c),
-         cp AS (SELECT w, count(*) AS c_p FROM tp GROUP BY 1),
-         cq AS (SELECT w, count(*) AS c_q FROM tq GROUP BY 1),
-         j AS (SELECT coalesce(cp.w, cq.w) AS w,
-                 coalesce(c_p, 0) AS c_p, coalesce(c_q, 0) AS c_q
-               FROM cp FULL OUTER JOIN cq ON cp.w = cq.w),
-         t AS (SELECT sum(c_p)::DOUBLE AS n_p, sum(c_q)::DOUBLE AS n_q,
-                 count(*)::DOUBLE AS v FROM j),
-         probs AS (SELECT
-             (c_p + 0.5) / (t.n_p + 0.5 * t.v) AS pw,
-             (c_q + 0.5) / (t.n_q + 0.5 * t.v) AS qw, t.v AS v
-           FROM j CROSS JOIN t)
-         SELECT max(v)::BIGINT AS vocab,
-           floor(sum(pw * ln(pw / qw)) * 10000 + 0.5) / 10000 AS kl_pq,
-           floor(sum(qw * ln(qw / pw)) * 10000 + 0.5) / 10000 AS kl_qp,
-           floor(sum(pw * ln(pw / ((pw + qw) / 2))
-             + qw * ln(qw / ((pw + qw) / 2))) / 2 * 10000 + 0.5) / 10000
-             AS js
-         FROM probs""",
-    "txt_lm_score" ->
-      """WITH tok AS (
-           SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk
-           FROM documents),
-         bg AS (
-           SELECT doc_id, tk[i.i + 1] AS w1, tk[i.i + 2] AS w2
-           FROM tok
-           CROSS JOIN unnest(range(0, greatest(len(tk) - 1, 0))) AS i(i)
-           WHERE len(tk) >= 2),
-         bc AS (SELECT w1, w2, count(*)::DOUBLE AS c
-                FROM bg GROUP BY 1, 2),
-         cc AS (SELECT w1, count(*)::DOUBLE AS c_ctx FROM bg GROUP BY 1),
-         v AS (SELECT count(DISTINCT u.w)::DOUBLE AS v
-               FROM (SELECT unnest(tk) AS w FROM tok) u),
-         sc AS (
-           SELECT bg.doc_id, count(*)::BIGINT AS n_bigrams,
-             avg(ln((coalesce(bc.c, 0) + 0.5)
-               / (coalesce(cc.c_ctx, 0) + 0.5 * v.v))) AS raw
-           FROM bg
-           LEFT JOIN bc USING (w1, w2)
-           LEFT JOIN cc USING (w1)
-           CROSS JOIN v
-           GROUP BY bg.doc_id)
-         SELECT d.doc_id, coalesce(sc.n_bigrams, 0)::BIGINT AS n_bigrams,
-           floor(sc.raw * 10000 + 0.5) / 10000 AS lm_score
-         FROM documents d LEFT JOIN sc USING (doc_id)
-         ORDER BY d.doc_id""",
-    "txt_langid" ->
-      """WITH t AS (
-           SELECT doc_id, lang,
-             string_split_regex(trim(lower(text)), '\s+') AS toks
-           FROM documents),
-         s AS (
-           SELECT doc_id, lang,
-             len(list_filter(toks, x -> list_contains(
-               ['der','die','das','und','ist','nicht','mit','ein'], x)))::DOUBLE
-               / greatest(len(toks), 1) AS s_de,
-             len(list_filter(toks, x -> list_contains(
-               ['the','and','of','to','in','is','that','with'], x)))::DOUBLE
-               / greatest(len(toks), 1) AS s_en,
-             len(list_filter(toks, x -> list_contains(
-               ['el','la','los','y','es','no','con','una'], x)))::DOUBLE
-               / greatest(len(toks), 1) AS s_es,
-             len(list_filter(toks, x -> list_contains(
-               ['le','la','les','et','est','pas','avec','une'], x)))::DOUBLE
-               / greatest(len(toks), 1) AS s_fr,
-             len(list_filter(toks, x -> list_contains(
-               ['的','是','不','了','在','和','有','我'], x)))::DOUBLE
-               / greatest(len(toks), 1) AS s_zh
-           FROM t)
-         SELECT doc_id, lang,
-           CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
-                WHEN s_de >= greatest(s_en, s_es, s_fr, s_zh) THEN 'de'
-                WHEN s_en >= greatest(s_es, s_fr, s_zh) THEN 'en'
-                WHEN s_es >= greatest(s_fr, s_zh) THEN 'es'
-                WHEN s_fr >= s_zh THEN 'fr'
-                ELSE 'zh' END AS lang_pred
-         FROM s ORDER BY doc_id""",
-    "txt_fingerprint" ->
-      """SELECT doc_id,
-           md5(array_to_string(list_sort(list_distinct(
-             string_split_regex(trim(text), '\s+'))), ' ')) AS fingerprint
-         FROM documents ORDER BY doc_id""",
-    "ev_distinct" ->
-      """WITH keyed AS (
-           SELECT CAST(date_trunc('hour', ts) AS varchar) AS h,
-             user_id::VARCHAR AS k
-           FROM events),
-         hsh AS (
-           SELECT h,
-             ('0x' || substr(md5('hl:r:' || k),1,8))::BIGINT % 512
-               AS register,
-             ('0x' || substr(md5('hl:w:' || k),1,8))::BIGINT AS w
-           FROM keyed),
-         r AS (
-           SELECT h, register,
-             max(CASE WHEN w = 0 THEN 33
-                      ELSE 33 - length(bin(w)) END) AS maxrho
-           FROM hsh GROUP BY h, register),
-         agg AS (
-           SELECT h, count(*) AS present,
-             coalesce(sum(1.0 / (1::BIGINT << maxrho)), 0.0) AS sp
-           FROM r GROUP BY h),
-         est AS (
-           SELECT h,
-             round(CASE WHEN (0.7213 / (1 + 1.079/512)) * 512 * 512
-                          / (sp + (512 - present)) <= 2.5 * 512
-                        AND present < 512
-                   THEN 512 * ln(512.0 / (512 - present))
-                   ELSE (0.7213 / (1 + 1.079/512)) * 512 * 512
-                          / (sp + (512 - present)) END, 2) AS est_users
-           FROM agg),
-         x AS (SELECT CAST(date_trunc('hour', ts) AS varchar) AS h,
-                 count(DISTINCT user_id) AS exact_users
-               FROM events GROUP BY 1)
-         SELECT est.h, est_users, exact_users::BIGINT AS exact_users,
-           round(abs(est_users - exact_users) / exact_users * 100, 2)
-             AS err_pct
-         FROM est JOIN x USING (h) ORDER BY h""",
-    "ev_sessionize" ->
-      """WITH e AS (
-           SELECT user_id, event_id, value, epoch_ns(ts) // 1000 AS us
-           FROM events),
-         g AS (
-           SELECT user_id, event_id, value, us,
-             CASE WHEN us - lag(us) OVER w IS NULL
-                    OR us - lag(us) OVER w > 1800000000 THEN 1 ELSE 0 END
-               AS new_sess
-           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-         s AS (
-           SELECT user_id, event_id, value,
-             sum(new_sess) OVER (PARTITION BY user_id ORDER BY us, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS session_id
-           FROM g)
-         SELECT user_id, session_id::BIGINT AS session_id,
-           count(*) AS n_events, round(sum(value), 2) AS total
-         FROM s GROUP BY user_id, s.session_id
-         ORDER BY user_id, session_id""",
-    "ev_asof" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, value,
-             epoch_ns(ts) // 1000 AS us
-           FROM events),
-         p AS (SELECT user_id, event_id, us FROM e
-               WHERE event_type = 'purchase'),
-         v AS (SELECT user_id, us, max(value) AS view_value FROM e
-               WHERE event_type = 'view' GROUP BY 1, 2)
-         SELECT p.user_id, p.event_id, p.us, v.view_value AS asof_view_value
-         FROM p ASOF LEFT JOIN v
-           ON p.user_id = v.user_id AND p.us >= v.us
-         ORDER BY p.event_id""",
-    "ev_asof_fwd" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, value,
-             epoch_ns(ts) // 1000 AS us
-           FROM events),
-         p AS (SELECT user_id, event_id, us FROM e
-               WHERE event_type = 'purchase'),
-         v AS (SELECT user_id, us, max(value) AS view_value FROM e
-               WHERE event_type = 'view' GROUP BY 1, 2)
-         SELECT p.user_id, p.event_id, p.us, v.view_value AS asof_view_value
-         FROM p ASOF LEFT JOIN v
-           ON p.user_id = v.user_id AND p.us <= v.us
-         ORDER BY p.event_id""",
-    "ev_asof_near" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, value,
-             epoch_ns(ts) // 1000 AS us
-           FROM events),
-         p AS (SELECT user_id, event_id, us FROM e
-               WHERE event_type = 'purchase'),
-         v AS (SELECT user_id, us, max(value) AS view_value FROM e
-               WHERE event_type = 'view' GROUP BY 1, 2),
-         b AS (SELECT p.event_id, v.us AS rts, v.view_value AS bv
-               FROM p ASOF LEFT JOIN v
-                 ON p.user_id = v.user_id AND p.us >= v.us),
-         f AS (SELECT p.event_id, v.us AS rts, v.view_value AS fv
-               FROM p ASOF LEFT JOIN v
-                 ON p.user_id = v.user_id AND p.us <= v.us)
-         SELECT p.user_id, p.event_id, p.us,
-           CASE WHEN m.rts IS NOT NULL AND abs(p.us - m.rts) <= 3600000000
-                THEN m.mv END AS asof_view_value
-         FROM p
-         LEFT JOIN (
-           SELECT b.event_id,
-             CASE WHEN f.rts IS NULL THEN b.rts
-                  WHEN b.rts IS NOT NULL
-                       AND (p2.us - b.rts) <= (f.rts - p2.us) THEN b.rts
-                  ELSE f.rts END AS rts,
-             CASE WHEN f.rts IS NULL THEN b.bv
-                  WHEN b.rts IS NOT NULL
-                       AND (p2.us - b.rts) <= (f.rts - p2.us) THEN b.bv
-                  ELSE f.fv END AS mv
-           FROM b JOIN f ON b.event_id = f.event_id
-           JOIN p p2 ON p2.event_id = b.event_id) m
-           ON m.event_id = p.event_id
-         ORDER BY p.event_id""",
-    "ev_attrib" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, value,
-             epoch_ns(ts) // 1000 AS us
-           FROM events),
-         p AS (SELECT event_id AS purchase_id, user_id, us AS p_us,
-               value AS purchase_value FROM e
-               WHERE event_type = 'purchase'),
-         v AS (SELECT event_id AS view_id, user_id AS v_user_id, us AS v_us
-               FROM e WHERE event_type = 'view')
-         SELECT p.purchase_id, p.user_id, p.p_us, p.purchase_value,
-           v.view_id, v.v_us
-         FROM p JOIN v ON p.user_id = v.v_user_id
-           AND v.v_us <= p.p_us AND v.v_us >= p.p_us - 3600000000
-         ORDER BY purchase_id, view_id""",
-    "q_range_join" ->
-      """WITH pts AS (
-           SELECT l_orderkey, l_linenumber,
-             date_diff('day', DATE '1970-01-01', l_shipdate::DATE)::BIGINT
-               AS ship_day
-           FROM lineitem WHERE l_orderkey < 200),
-         ivs AS (
-           SELECT o_orderkey,
-             date_diff('day', DATE '1970-01-01', o_orderdate::DATE)::BIGINT
-               AS lo
-           FROM orders WHERE o_orderkey < 2000)
-         SELECT l_orderkey, l_linenumber, ship_day, o_orderkey
-         FROM pts JOIN ivs
-           ON ship_day BETWEEN lo AND lo + 7
-         ORDER BY l_orderkey, l_linenumber, ship_day, o_orderkey""",
-    "txt_normalize" ->
-      """SELECT doc_id,
-           trim(regexp_replace(regexp_replace(lower(text),
-             '[.,;:!?''"()\[\]{}-]', '', 'g'), '\s+', ' ', 'g')) AS norm,
-           length(trim(regexp_replace(regexp_replace(lower(text),
-             '[.,;:!?''"()\[\]{}-]', '', 'g'), '\s+', ' ', 'g')))::BIGINT
-             AS norm_len
-         FROM documents ORDER BY doc_id""",
-    "txt_length_hist" ->
-      """SELECT (length(text) // 100 * 100)::BIGINT AS bucket_lo,
-           count(*) AS n_docs
-         FROM documents GROUP BY 1 ORDER BY 1""",
-    "txt_top_terms" ->
-      """SELECT token, count(*) AS cnt FROM (
-           SELECT unnest(string_split_regex(trim(text), '\s+')) AS token
-           FROM documents)
-         GROUP BY token ORDER BY cnt DESC, token ASC LIMIT 20""",
-    // the exact answer, plainly: certifies that heavyHitters'
-    // sample-generated candidate set recovered the true top-k
-    "txt_heavy_hitters" ->
-      """SELECT token, count(*)::BIGINT AS n FROM (
-           SELECT unnest(string_split_regex(trim(text), '\s+')) AS token
-           FROM documents)
-         GROUP BY token ORDER BY n DESC, token ASC LIMIT 15""",
-    "txt_bpe" -> bpeOracleSql(8),
-    "txt_bpe_tokens" -> bpeTokensOracleSql(8),
-    // the artifact round trip must land on the identical counts
-    "txt_bpe_artifact" -> bpeTokensOracleSql(8),
-    "ds_token_budget_bpe" ->
-      s"""${bpeCtes(8)},
-         ${bpeEncodeCtes(8)},
-         $QualityBaseCtes,
-         qual AS (SELECT doc_id, $QualityExprSql AS quality FROM base),
-         ranked AS (SELECT d.doc_id, d.lang, t.n_tokens,
-             coalesce(sum(t.n_tokens) OVER (PARTITION BY d.lang
-               ORDER BY q.quality DESC, d.doc_id ASC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-               0)::BIGINT AS spent
-           FROM documents d JOIN qual q USING (doc_id)
-           JOIN btok t USING (doc_id))
-         SELECT doc_id, lang, n_tokens FROM ranked
-         WHERE spent < 5000 ORDER BY doc_id""",
-    "txt_tfidf" ->
-      """WITH terms AS (
-           SELECT doc_id, unnest(string_split_regex(trim(text), '\s+'))
-             AS token
-           FROM documents),
-         tf AS (SELECT doc_id, token, count(*) AS tf FROM terms
-                GROUP BY 1, 2),
-         dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-         n AS (SELECT count(*)::DOUBLE AS n_docs FROM documents)
-         SELECT doc_id, tf.token, tf, df,
-           round(tf * ln(n_docs / df), 6) AS tfidf
-         FROM tf JOIN dfreq ON tf.token = dfreq.token CROSS JOIN n
-         WHERE doc_id < 10
-         ORDER BY doc_id, tf.token""",
-    "mm_meta" ->
-      """SELECT doc_id, octet_length(text::BLOB)::BIGINT AS byte_len,
-           md5(text) AS checksum
-         FROM documents ORDER BY doc_id""",
-    // the perceptual-hash rig's fingerprints, rebuilt CLOSED-FORM from
-    // doc_id (planted gradient bits + their prefix sums — see the
-    // mm_dedup query comment), then a brute-force pair join: matches
-    // Spark's decode->resample->hash->banded chain only if every stage
-    // is bit-exact. Bit 63 is never set on either hash, so BIGINT
-    // shifts/xor agree across engines.
-    "mm_dedup" ->
-      """WITH d AS (SELECT doc_id, (doc_id % 16)::BIGINT AS g
-               FROM documents WHERE doc_id < 1000),
-         bits AS (SELECT d.doc_id, j.j,
-             CASE WHEN (d.doc_id % 3 = 0 AND j.j = d.doc_id % 63)
-                  THEN 1 - (CASE WHEN ((d.g*131 + j.j*37) % 97) < 41
-                            THEN 1 ELSE 0 END)
-                  ELSE (CASE WHEN ((d.g*131 + j.j*37) % 97) < 41
-                        THEN 1 ELSE 0 END)
-             END::BIGINT AS bit
-           FROM d CROSS JOIN unnest(range(0, 63)) AS j(j)),
-         dh AS (SELECT doc_id, sum(bit << j)::BIGINT AS dhash
-                FROM bits GROUP BY doc_id),
-         gridc AS (SELECT cy.cy, cx.cx
-                   FROM unnest(range(0, 8)) AS cy(cy)
-                   CROSS JOIN unnest(range(0, 8)) AS cx(cx)),
-         pre AS (SELECT d.doc_id, c.cy, c.cx,
-                   COALESCE(sum(b.bit), 0) AS sb
-                 FROM d CROSS JOIN gridc c
-                 LEFT JOIN bits b ON b.doc_id = d.doc_id
-                   AND b.j >= c.cy*8 AND b.j < c.cy*8 + c.cx
-                 GROUP BY d.doc_id, c.cy, c.cx),
-         cells AS (SELECT p.doc_id, p.cy, p.cx,
-                     100 + ((d.g*13 + p.cy*7) % 40)
-                       + 5*(2*p.sb - p.cx) AS v
-                   FROM pre p JOIN d ON d.doc_id = p.doc_id),
-         tots AS (SELECT doc_id, sum(v) AS tot FROM cells
-                  GROUP BY doc_id),
-         ah AS (SELECT c.doc_id,
-                  sum(CASE WHEN c.cy*8 + c.cx < 63 AND c.v*64 > t.tot
-                      THEN 1::BIGINT << (c.cy*8 + c.cx)
-                      ELSE 0 END)::BIGINT AS ahash
-                FROM cells c JOIN tots t ON t.doc_id = c.doc_id
-                GROUP BY c.doc_id),
-         fp AS (SELECT dh.doc_id, dh.dhash, ah.ahash
-                FROM dh JOIN ah ON ah.doc_id = dh.doc_id)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           bit_count(xor(a.dhash, b.dhash))::INT AS hamming_d,
-           bit_count(xor(a.ahash, b.ahash))::INT AS hamming_a
-         FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-         WHERE bit_count(xor(a.dhash, b.dhash)) <= 3
-         ORDER BY id_a, id_b""",
-    // the audio rig's envelope hash collapses closed-form to the
-    // planted bits themselves (+-150 steps are strictly monotone, the
-    // walk stays positive so |sample| == amplitude): rebuild each
-    // doc's fingerprint from doc_id and brute-force the pair join —
-    // matches Spark's wav-decode -> window -> gradient chain only if
-    // every integer stage is bit-exact
-    "mm_audio_dedup" ->
-      """WITH d AS (SELECT doc_id, (doc_id % 16)::BIGINT AS g
-               FROM documents WHERE doc_id < 1000),
-         bits AS (SELECT d.doc_id, j.j,
-             CASE WHEN (d.doc_id % 3 = 1 AND j.j = d.doc_id % 63)
-                  THEN 1 - (CASE WHEN ((d.g*113 + j.j*41) % 89) < 37
-                            THEN 1 ELSE 0 END)
-                  ELSE (CASE WHEN ((d.g*113 + j.j*41) % 89) < 37
-                        THEN 1 ELSE 0 END)
-             END::BIGINT AS bit
-           FROM d CROSS JOIN unnest(range(0, 63)) AS j(j)),
-         fp AS (SELECT doc_id, sum(bit << j)::BIGINT AS ehash
-                FROM bits GROUP BY doc_id)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           bit_count(xor(a.ehash, b.ehash))::INT AS hamming
-         FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-         WHERE bit_count(xor(a.ehash, b.ehash)) <= 3
-         ORDER BY id_a, id_b""",
-    // the video rig's frame fingerprints rebuilt closed-form per
-    // (doc_id, frame seed), then the set-jaccard join replayed —
-    // matches Spark's demux -> per-frame decode -> dHash ->
-    // inverted-index chain only if every frame hashes bit-exact. The
-    // stop-frame prune (maxDocFreq = 60) is replayed too: join sides
-    // exclude frames with doc-freq > 60, set sizes stay unpruned —
-    // the exact semantics videoDedupPairs implements
-    "mm_video_dedup" ->
-      """WITH d AS (SELECT doc_id, (doc_id % 8)::BIGINT AS g
-               FROM documents WHERE doc_id < 400),
-         fr AS (SELECT d.doc_id,
-                  CASE WHEN d.doc_id % 3 = 0 AND k.k = 2
-                       THEN 2000 + d.doc_id ELSE d.g*8 + k.k END AS s
-                FROM d CROSS JOIN unnest(range(0, 5)) AS k(k)),
-         fb AS (SELECT doc_id, s, j.j,
-                  (CASE WHEN ((s*131 + j.j*37) % 97) < 41
-                   THEN 1 ELSE 0 END)::BIGINT AS bit
-                FROM fr CROSS JOIN unnest(range(0, 63)) AS j(j)),
-         fh AS (SELECT DISTINCT doc_id, dhash FROM (
-                  SELECT doc_id, s, sum(bit << j)::BIGINT AS dhash
-                  FROM fb GROUP BY doc_id, s)),
-         sz AS (SELECT doc_id, count(*) AS n FROM fh GROUP BY doc_id),
-         stopf AS (SELECT dhash FROM fh GROUP BY dhash
-                   HAVING count(*) > 60),
-         fhp AS (SELECT doc_id, dhash FROM fh
-                 WHERE dhash NOT IN (SELECT dhash FROM stopf)),
-         pr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                  count(*)::BIGINT AS n_shared
-                FROM fhp a JOIN fhp b
-                  ON a.dhash = b.dhash AND a.doc_id < b.doc_id
-                GROUP BY a.doc_id, b.doc_id)
-         SELECT p.id_a, p.id_b, p.n_shared,
-           round(p.n_shared::DOUBLE / (sa.n + sb.n - p.n_shared), 4)
-             AS jaccard
-         FROM pr p JOIN sz sa ON sa.doc_id = p.id_a
-         JOIN sz sb ON sb.doc_id = p.id_b
-         WHERE round(p.n_shared::DOUBLE / (sa.n + sb.n - p.n_shared), 4)
-           >= 0.5
-         ORDER BY id_a, id_b""",
-    // perceptual CURATION: the mm_dedup dhash construction rebuilt
-    // closed-form, the banded pair set brute-forced (recall is exact
-    // at hamming <= 3, so brute force IS the banded answer), then
-    // min-label transitive closure (the dd_survivors_exact recursion)
-    // and one survivor per component — keepFirstExact on pixels
-    "mm_survivors" ->
-      """WITH RECURSIVE d AS (SELECT doc_id, (doc_id % 16)::BIGINT AS g
-               FROM documents WHERE doc_id < 1000),
-         bits AS (SELECT d.doc_id, j.j,
-             CASE WHEN (d.doc_id % 3 = 0 AND j.j = d.doc_id % 63)
-                  THEN 1 - (CASE WHEN ((d.g*131 + j.j*37) % 97) < 41
-                            THEN 1 ELSE 0 END)
-                  ELSE (CASE WHEN ((d.g*131 + j.j*37) % 97) < 41
-                        THEN 1 ELSE 0 END)
-             END::BIGINT AS bit
-           FROM d CROSS JOIN unnest(range(0, 63)) AS j(j)),
-         dh AS (SELECT doc_id, sum(bit << j)::BIGINT AS dhash
-                FROM bits GROUP BY doc_id),
-         prs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-                 FROM dh a JOIN dh b ON a.doc_id < b.doc_id
-                 WHERE bit_count(xor(a.dhash, b.dhash)) <= 3),
-         edges AS (SELECT id_a AS a, id_b AS b FROM prs
-                   UNION SELECT id_b, id_a FROM prs),
-         reach(a, b) AS (
-           SELECT a, a FROM (SELECT DISTINCT a FROM edges)
-           UNION
-           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-         labels AS (SELECT a AS doc_id, min(b) AS cluster FROM reach
-                    GROUP BY a)
-         SELECT doc_id FROM d
-         WHERE doc_id NOT IN
-           (SELECT doc_id FROM labels WHERE doc_id != cluster)
-         ORDER BY doc_id""",
-    // AUDIO curation: the mm_audio_dedup envelope-hash construction
-    // rebuilt closed-form, the banded pair set brute-forced, then the
-    // same min-label transitive closure and one survivor per component
-    // — keepFirstExact on waveforms
-    "mm_audio_survivors" ->
-      """WITH RECURSIVE d AS (SELECT doc_id, (doc_id % 16)::BIGINT AS g
-               FROM documents WHERE doc_id < 1000),
-         bits AS (SELECT d.doc_id, j.j,
-             CASE WHEN (d.doc_id % 3 = 1 AND j.j = d.doc_id % 63)
-                  THEN 1 - (CASE WHEN ((d.g*113 + j.j*41) % 89) < 37
-                            THEN 1 ELSE 0 END)
-                  ELSE (CASE WHEN ((d.g*113 + j.j*41) % 89) < 37
-                        THEN 1 ELSE 0 END)
-             END::BIGINT AS bit
-           FROM d CROSS JOIN unnest(range(0, 63)) AS j(j)),
-         fp AS (SELECT doc_id, sum(bit << j)::BIGINT AS ehash
-                FROM bits GROUP BY doc_id),
-         prs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-                 FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-                 WHERE bit_count(xor(a.ehash, b.ehash)) <= 3),
-         edges AS (SELECT id_a AS a, id_b AS b FROM prs
-                   UNION SELECT id_b, id_a FROM prs),
-         reach(a, b) AS (
-           SELECT a, a FROM (SELECT DISTINCT a FROM edges)
-           UNION
-           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-         labels AS (SELECT a AS doc_id, min(b) AS cluster FROM reach
-                    GROUP BY a)
-         SELECT doc_id FROM d
-         WHERE doc_id NOT IN
-           (SELECT doc_id FROM labels WHERE doc_id != cluster)
-         ORDER BY doc_id""",
-    // VIDEO curation: the mm_video_dedup frame-set-jaccard join
-    // replayed closed-form (including the inert maxDocFreq = 60
-    // stop-frame prune), then the min-label transitive closure over
-    // the threshold-passing pairs — keepFirstExact on videos
-    "mm_video_survivors" ->
-      """WITH RECURSIVE d AS (SELECT doc_id, (doc_id % 8)::BIGINT AS g
-               FROM documents WHERE doc_id < 400),
-         fr AS (SELECT d.doc_id,
-                  CASE WHEN d.doc_id % 3 = 0 AND k.k = 2
-                       THEN 2000 + d.doc_id ELSE d.g*8 + k.k END AS s
-                FROM d CROSS JOIN unnest(range(0, 5)) AS k(k)),
-         fb AS (SELECT doc_id, s, j.j,
-                  (CASE WHEN ((s*131 + j.j*37) % 97) < 41
-                   THEN 1 ELSE 0 END)::BIGINT AS bit
-                FROM fr CROSS JOIN unnest(range(0, 63)) AS j(j)),
-         fh AS (SELECT DISTINCT doc_id, dhash FROM (
-                  SELECT doc_id, s, sum(bit << j)::BIGINT AS dhash
-                  FROM fb GROUP BY doc_id, s)),
-         sz AS (SELECT doc_id, count(*) AS n FROM fh GROUP BY doc_id),
-         stopf AS (SELECT dhash FROM fh GROUP BY dhash
-                   HAVING count(*) > 60),
-         fhp AS (SELECT doc_id, dhash FROM fh
-                 WHERE dhash NOT IN (SELECT dhash FROM stopf)),
-         pr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                  count(*)::BIGINT AS n_shared
-                FROM fhp a JOIN fhp b
-                  ON a.dhash = b.dhash AND a.doc_id < b.doc_id
-                GROUP BY a.doc_id, b.doc_id),
-         prs AS (SELECT p.id_a, p.id_b
-                 FROM pr p JOIN sz sa ON sa.doc_id = p.id_a
-                 JOIN sz sb ON sb.doc_id = p.id_b
-                 WHERE round(p.n_shared::DOUBLE
-                     / (sa.n + sb.n - p.n_shared), 4) >= 0.5),
-         edges AS (SELECT id_a AS a, id_b AS b FROM prs
-                   UNION SELECT id_b, id_a FROM prs),
-         reach(a, b) AS (
-           SELECT a, a FROM (SELECT DISTINCT a FROM edges)
-           UNION
-           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-         labels AS (SELECT a AS doc_id, min(b) AS cluster FROM reach
-                    GROUP BY a)
-         SELECT doc_id FROM d
-         WHERE doc_id NOT IN
-           (SELECT doc_id FROM labels WHERE doc_id != cluster)
-         ORDER BY doc_id""",
-  )
 
   /** Shared CTE chain (corpus → … → dec2) for the ds_curate and
     * ds_curate_staged oracles — each stage's formula byte-identical to

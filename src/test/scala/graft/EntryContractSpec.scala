@@ -1,21 +1,15 @@
 package graft
 
+import graft.queries.{Entry, Registry}
+
 /** Meta-spec for the driver contract: every query the engine claims is
-  * either DuckDB-oracled or on the explicit, documented rows-only list —
-  * so a new query silently missing its oracle (or an oracle whose query
-  * was renamed away) fails CI here instead of surfacing as a weaker
-  * check in the driver's correctness run. */
+  * one `Entry` carrying its DuckDB oracle, so a query cannot lose its
+  * oracle (or an oracle its query) to a rename — the registry rejects a
+  * duplicate name instead of silently keeping the last one. */
 class EntryContractSpec extends SparkTestBase {
 
-  // queries allowed to lack a value oracle: none — as of round 6 even the
-  // random samplers oracle their invariants (count + membership), the
-  // x_approx_distinct trick
-  private val rowsOnly = Set.empty[String]
-
-  // the one-orphan / one-missing checks below catch a HALF-dropped pair;
-  // pin the exact count so an accidental deletion of a whole query+oracle
-  // PAIR can't shrink the contract silently. Update alongside intentional
-  // additions.
+  // pin the exact count so an accidental deletion of a whole entry can't
+  // shrink the contract silently. Update alongside intentional additions.
   private val ContractSize = 155
 
   test("the contract holds exactly the expected number of queries") {
@@ -25,23 +19,19 @@ class EntryContractSpec extends SparkTestBase {
     assert(SparkEntry.oracleSql.size == ContractSize)
   }
 
-  test("every query has an oracle unless explicitly rows-only") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    val missing = q -- o -- rowsOnly
-    assert(missing.isEmpty,
-      s"queries without an oracle (add SQL or justify rows-only): $missing")
+  test("the registry rejects a roster with a duplicate name") {
+    val first = SparkEntry.registry.entries.head
+    val clash = first.copy(oracle = "SELECT 1")
+    val e = intercept[IllegalArgumentException](
+      new Registry(SparkEntry.registry.entries :+ clash))
+    assert(e.getMessage.contains(first.name))
   }
 
-  test("no orphan oracles (oracle key without a query)") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracles with no query: $orphans")
-  }
-
-  test("rows-only list is tight (those queries really have no oracle)") {
-    val stale = rowsOnly.filter(SparkEntry.oracleSql.contains)
-    assert(stale.isEmpty, s"now-oracled queries still listed rows-only: $stale")
-    assert(rowsOnly.subsetOf(SparkEntry.queries.keySet))
+  test("every entry carries a non-blank oracle") {
+    val blank = SparkEntry.registry.entries.collect {
+      case Entry(name, _, oracle) if oracle == null || oracle.trim.isEmpty => name
+    }
+    assert(blank.isEmpty, s"entries without oracle SQL: $blank")
   }
 
   test("flagship entry returns rows on the smallest scale factor") {

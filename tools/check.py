@@ -56,8 +56,11 @@ def main(sf_dir: str, out_dir: str) -> int:
         seen.add(name)
         spark_df = norm(pd.read_parquet(qdir))
         if name not in oracles:
-            print(f"{name:24s} rows-only: {len(spark_df)} rows "
-                  f"cols={list(spark_df.columns)}")
+            # every contract Entry carries its oracle, so a dump without
+            # one is a broken artifact, never a weaker pass
+            print(f"{name:24s} NO ORACLE: {len(spark_df)} rows dumped but "
+                  f"oracle_sql.json has no SQL for it")
+            failures += 1
             continue
         try:
             ora = norm(con.execute(oracles[name]).fetchdf())
